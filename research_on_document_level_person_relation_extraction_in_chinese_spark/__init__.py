@@ -8,15 +8,15 @@ pages, expressed as declarative DataFrame plans + vectorized pandas/Arrow UDFs.
 Layout
 ------
 - ``functions/``  pure-function kernel (triple parse, Chinese conversion,
-  canonicalization, text analysis) — shared by the Spark pipeline and by the
+  canonicalization, pair analysis) — shared by the Spark pipeline and by the
   plain-Python parity oracle.
 - ``scorers/``    deterministic rule-backed scorers replacing the reference's
-  per-document LLM API calls (same prompt/label schema).
-- ``sources/``    synthetic corpus generator, WARC decoding, stage catalog
+  per-document LLM API calls (same answer schema).
+- ``sources/``    synthetic corpus generator and the stage catalog
   (checkpointed stage tables with lineage + metrics).
-- ``operators/``  pipeline stages (detect, parse, taxonomy, consensus,
-  expansion, linking, graph, evaluate) + training-data ops (dedup,
-  similarity, text analysis, multimodal).
+- ``operators/``  pipeline stages (fused annotate/parse and consensus,
+  taxonomy, expansion, replay, linking, graph, evaluate) + training-data
+  ops (dedup, similarity, text analysis, multimodal).
 - ``plans/``      end-to-end pipeline runner with per-stage checkpoint/resume.
 - ``streaming/``  Structured-Streaming ingest variant.
 """

@@ -1,4 +1,4 @@
-"""Per-document analysis kernel: density, pair generation, co-occurrence.
+"""Per-document analysis kernel: name density and pair generation.
 
 Pure functions shared by the Spark pipeline (inside pandas UDFs /
 ``applyInPandas``) and the plain-Python parity oracle.
@@ -7,7 +7,6 @@ Pure functions shared by the Spark pipeline (inside pandas UDFs /
 from __future__ import annotations
 
 import itertools
-import re
 
 #: Expansion work caps (reference ``sota_ner/ckip_expansion.py:44-52``):
 #: doc truncated at 4000 chars; name density ≤ 0.95*2 per 100 chars;
@@ -16,8 +15,6 @@ import re
 MAX_DOC_LENGTH = 4000
 MAX_NAME_DENSITY = 0.95 * 2
 MAX_PAIRS = 105
-
-_SENTENCE_SPLIT_RE = re.compile(r"[\n。；;！!？?]")
 
 
 def generate_pairs(names: list[str]) -> list[tuple[str, str]]:
@@ -52,31 +49,3 @@ def expansion_pairs(
     if name_density > MAX_NAME_DENSITY or len(extra) > MAX_PAIRS:
         return "high", []
     return "middle", extra
-
-
-def contains_both(document: str, p1: str, p2: str, limit: int | None = None) -> bool:
-    """F9 — hallucination / truncation-survival check: both names literally in
-    ``document[:limit]`` (reference ``sota_ner/ckip_expansion.py:175,230``)."""
-    doc = document[:limit] if limit else document
-    return p1 in doc and p2 in doc
-
-
-def sentence_cooccurrence(document: str, e1: str, e2: str) -> bool:
-    """W1 — do the two names co-occur inside one sentence, splitting on
-    ``[\\n。；;！!？?]`` (reference ``cross_sentence.py:11-12,21-38``)."""
-    for sentence in _SENTENCE_SPLIT_RE.split(document):
-        if e1 in sentence and e2 in sentence:
-            return True
-    return False
-
-
-def min_char_distance(document: str, e1: str, e2: str) -> int:
-    """F11 — minimum ``|pos1 - pos2| - len(e1)`` over all occurrence pairs of
-    the two names; -1 when either is absent (reference
-    ``cross_sentence.py:62-80``)."""
-    pos1 = [m.start() for m in re.finditer(re.escape(e1), document)]
-    pos2 = [m.start() for m in re.finditer(re.escape(e2), document)]
-    if not pos1 or not pos2:
-        return -1
-    best = min(abs(a - b) for a in pos1 for b in pos2)
-    return max(best - len(e1), 0)

@@ -11,15 +11,11 @@ number of Arrow crossings:
   node 3: NER + density + pair expansion scoring (M7–M9, in expansion.py)
 
 Everything else (taxonomy remap, consensus merge/dedup, hallucination filter,
-truncation, explode/distinct, joins) stays JVM-side. The standalone operators
-in annotate.py / parse.py / consensus.py implement the same stages unfused
-(one concern per node) and share every kernel function with these — the
-parity gate runs over the fused pipeline.
+truncation, explode/distinct, joins) stays JVM-side.
 
 Set-op semantics here replicate Spark's ``array_intersect``/``array_except``
-(left-to-right order, distinct) so the fused and unfused consensus stages are
-interchangeable; both mirror the reference's ``set()``-equality comparison
-(``CommonCrawl/data/train/postprecess.py:168-188``).
+(left-to-right order, distinct) and mirror the reference's ``set()``-equality
+comparison (``CommonCrawl/data/train/postprecess.py:168-188``).
 """
 
 from __future__ import annotations
@@ -194,8 +190,8 @@ def fused_consensus_stage(
     annotators: tuple[str, ...] = ("gemini", "gpt"),
     strict_verify_failure: bool = False,
 ) -> DataFrame:
-    """Same output contract as operators.consensus.consensus_stage (minus the
-    intermediate wrong/pass columns); merge/dedup/entities stay JVM-side.
+    """Cross-comparison + verification → ``consensus_label`` per doc;
+    merge/dedup/entities stay JVM-side.
 
     ``strict_verify_failure=False`` is the train-corpus semantics: an
     annotator's unverifiable triples are dropped per-triple

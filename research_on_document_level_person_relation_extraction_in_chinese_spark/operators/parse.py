@@ -1,17 +1,13 @@
-"""Triple-parse stage (SURVEY §2.6 F1/F2) as vectorized pandas UDFs.
+"""Triple-parse types (SURVEY §2.6 F1/F2) and the per-cell parse the fused
+annotate node and the replay stages run inside their pandas UDFs.
 
 The reference mutates JSON-string columns per row (``postprecess.py:208-267``);
-here the parse kernel runs over Arrow batches and emits real nested types:
+here the parse kernel emits real nested types:
 ``ternary array<struct<subj,obj,rel>>``, ``relations array<string>``,
 ``entities array<string>``, ``parse_error boolean`` — no JSON-in-string.
 """
 
 from __future__ import annotations
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from pyspark.sql.types import (
     ArrayType,
@@ -21,9 +17,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.parse import HAS_RELATION, check_detection_format, parse_triples
+from ..functions.parse import HAS_RELATION, parse_triples
 
-TERNARY_T = "array<struct<subj:string,obj:string,rel:string>>"
 TERNARY_DT = ArrayType(
     StructType(
         [
@@ -53,68 +48,3 @@ def _parse_cell(output, has_relation, tolerant: bool):
         "entities": entities,
         "parse_error": err,
     }
-
-
-DUAL_PARSED_DT = StructType(
-    [StructField("gemini", PARSED_DT), StructField("gpt", PARSED_DT)]
-)
-
-
-@pandas_udf(DUAL_PARSED_DT)
-def _parse_dual_tolerant(
-    g_out: pd.Series, g_has: pd.Series, p_out: pd.Series, p_has: pd.Series
-) -> pd.DataFrame:
-    # both annotators parsed in ONE Python node: python-worker startup cost
-    # is per (plan node × partition), so fused nodes halve the fixed overhead
-    rows = [
-        {
-            "gemini": _parse_cell(go, gh, True),
-            "gpt": _parse_cell(po, ph, True),
-        }
-        for go, gh, po, ph in zip(g_out, g_has, p_out, p_has)
-    ]
-    return pd.DataFrame(rows)
-
-
-@pandas_udf(DUAL_PARSED_DT)
-def _parse_dual_strict(
-    g_out: pd.Series, g_has: pd.Series, p_out: pd.Series, p_has: pd.Series
-) -> pd.DataFrame:
-    rows = [
-        {
-            "gemini": _parse_cell(go, gh, False),
-            "gpt": _parse_cell(po, ph, False),
-        }
-        for go, gh, po, ph in zip(g_out, g_has, p_out, p_has)
-    ]
-    return pd.DataFrame(rows)
-
-
-@pandas_udf(BooleanType())
-def format_ok(output: pd.Series) -> pd.Series:
-    """F2 — detection-answer well-formedness (drives format-error counters)."""
-    return output.map(check_detection_format)
-
-
-def parse_stage(annotated: DataFrame, annotators=("gemini", "gpt"), tolerant: bool = True) -> DataFrame:
-    """+ {ann}_ternary / {ann}_relations / {ann}_entities / {ann}_parse_error.
-
-    ``tolerant`` selects the parse-kernel variant (test/inference path strips
-    quotes + accepts ``，``; train path is comma-only — SURVEY §7.3 risk 1).
-    Both annotators run in one fused Python node.
-    """
-    assert tuple(annotators) == ("gemini", "gpt"), "fused parse expects both annotators"
-    udf = _parse_dual_tolerant if tolerant else _parse_dual_strict
-    df = annotated.withColumn(
-        "_parsed",
-        udf(
-            F.col("gemini_output"),
-            F.col("gemini_has_relation"),
-            F.col("gpt_output"),
-            F.col("gpt_has_relation"),
-        ),
-    )
-    for ann in annotators:
-        for field in ("ternary", "relations", "entities", "parse_error"):
-            df = df.withColumn(f"{ann}_{field}", F.col(f"_parsed.{ann}.{field}"))
-    return df.drop("_parsed")

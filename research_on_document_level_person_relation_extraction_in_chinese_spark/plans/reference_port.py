@@ -4,8 +4,8 @@ logic — the parity oracle of SURVEY §5.2.
 This is NOT the Spark pipeline: it replays the reference's per-row control
 flow (stage order, sentinel handling, set-based comparison, trad-keyed dedup)
 doc by doc with the same deterministic scorers, producing the triple set the
-reference *would* emit on the synthetic corpus. The parity gate asserts the
-Spark pipeline reproduces it with P/R ≥ 0.95 (BASELINE.json metric).
+reference *would* emit on the synthetic corpus. The parity tests assert the
+Spark pipeline reproduces it exactly (set equality).
 
 Stage order mirrors entry point B (SURVEY §3.2):
 extractor → relation_classifier → update_relation → cross_comparison →

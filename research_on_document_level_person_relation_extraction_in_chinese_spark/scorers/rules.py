@@ -5,8 +5,8 @@ The synthetic corpus embeds relation sentences drawn from a closed template
 set over a closed cast of person names (FIXTURES.md §A1); the deterministic
 scorers (replacing the reference's LLM calls, SURVEY §2.7 M1–M11) recognize
 exactly these templates. Because generator, scorers, Spark pipeline, and the
-plain-Python parity oracle all share THIS module, the parity gate (P/R ≥ 0.95
-vs the reference-logic run) measures pipeline fidelity, not model luck.
+plain-Python parity oracle all share THIS module, the exact parity check
+against the reference-logic run measures pipeline fidelity, not model luck.
 
 Template phrasing mirrors the reference's own exemplars
 (reference ``gemma.py:35``, ``few_shot_gemini_api.py:124-144``).
@@ -102,26 +102,30 @@ TEMPLATES = [
 SELF_PAIR_FMT = "{A}與{A}互相勉勵。"
 SELF_PAIR_RAW = "勉勵"
 
+_SLOT_RE = re.compile(r"\{[AB]\}")
+
+
+def _template_regex(fmt: str) -> re.Pattern:
+    """Compile a template: every literal fragment ``re.escape``d, every
+    {A}/{B} slot one name group (in slot order). Escaping makes each fragment
+    match only itself, whatever characters a template holds — the condition
+    ``_longest_literal``'s prefilter relies on."""
+    return re.compile(f"({_NAME_ALT})".join(re.escape(f) for f in _SLOT_RE.split(fmt)))
+
+
 def _longest_literal(fmt: str) -> str:
     """Longest fixed fragment of a template (the text between/around the
-    {A}/{B} slots). SOUND regex prefilter: every match of the compiled
-    template regex contains every literal fragment of ``fmt`` verbatim, so
-    ``literal not in text`` proves ``finditer`` would find nothing — a C
-    substring probe instead of a full regex scan (find_instances was the
-    single hottest scorer kernel: ~10 whole-text regex scans per doc, most
-    of which match nothing)."""
-    return max(re.split(r"\{[AB]\}", fmt), key=len)
+    {A}/{B} slots). SOUND regex prefilter: every match of
+    ``_template_regex(fmt)`` contains every literal fragment of ``fmt``
+    verbatim, so ``literal not in text`` proves ``finditer`` would find
+    nothing — a C substring probe instead of a full regex scan
+    (find_instances was the single hottest scorer kernel: ~10 whole-text
+    regex scans per doc, most of which match nothing)."""
+    return max(_SLOT_RE.split(fmt), key=len)
 
 
-_COMPILED = [
-    (
-        t,
-        re.compile(t.fmt.format(A=f"({_NAME_ALT})", B=f"({_NAME_ALT})")),
-        _longest_literal(t.fmt),
-    )
-    for t in TEMPLATES
-]
-_SELF_RE = re.compile(SELF_PAIR_FMT.format(A=f"({_NAME_ALT})"))
+_COMPILED = [(t, _template_regex(t.fmt), _longest_literal(t.fmt)) for t in TEMPLATES]
+_SELF_RE = _template_regex(SELF_PAIR_FMT)
 _SELF_LIT = _longest_literal(SELF_PAIR_FMT)
 
 

@@ -153,8 +153,7 @@ def make_doc(doc_id: int, seed: int) -> tuple[dict, list[dict]]:
 
     text = "\n".join(content)
 
-    # html: content paragraphs interleaved with boilerplate ones; extraction
-    # (functions/text.py) must recover `text` byte-identically.
+    # html: content paragraphs interleaved with boilerplate ones.
     parts = ["<html><body>"]
     boiler_iter = itertools.cycle(_BOILER)
     for i, para in enumerate(content):
@@ -221,54 +220,6 @@ def golden_triples(spark, n_docs: int, seed: int = 42, partitions: int | None = 
     return (
         spark.range(0, n_docs, numPartitions=partitions)
         .mapInPandas(gen, schema=GOLDEN_SCHEMA)
-    )
-
-
-def generate_open_vocab_docs(
-    spark,
-    n_docs: int,
-    partitions: int | None = None,
-    tokens_per_doc: int = 60,
-    vocab_groups: int = 50,
-    group_vocab: int = 31,
-):
-    """Synthetic OPEN-VOCABULARY near-dup table ``(doc_id, grp, text)`` at any
-    size, built from pure JVM expressions (no Python) — the scale fixture for
-    the dedup-family scaling benches (round-2 verdict: the 5k-doc fixture
-    made the LSH job planning-bound, so scaling efficiency measured fixed
-    overhead, not the shuffle/compute path).
-
-    Structure mirrors ``__spark_entry__._open_vocab_docs``: docs come in
-    QUADS sharing a deterministic md5-token body (token j of a quad = hash of
-    (vocab-group, md5(quad, j) % group_vocab) → tokens shared across quads of
-    the same 50-way vocab group) plus a 12-char per-doc tail — within-quad
-    Jaccard ≈ 0.85, cross-quad ≈ 0.2, vocabulary grows with the corpus."""
-    import pyspark.sql.functions as F
-
-    partitions = partitions or _default_partitions(spark, n_docs)
-    ids = spark.range(0, n_docs, numPartitions=partitions)
-    quad = (F.col("id") - F.col("id") % 4).cast("string")
-    vg = ((F.col("id") - F.col("id") % 4) % vocab_groups).cast("string")
-
-    def tok(j: int):
-        pick = (
-            F.conv(
-                F.substring(F.md5(F.concat_ws(":", quad, F.lit(str(j)))), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % group_vocab
-        ).cast("string")
-        return F.substring(F.md5(F.concat_ws(":", vg, pick)), 1, 4)
-
-    body = F.concat(*[tok(j) for j in range(tokens_per_doc)])
-    tail = F.substring(
-        F.md5(F.concat(F.lit("tail:"), F.col("id").cast("string"))), 1, 12
-    )
-    return ids.select(
-        F.col("id").alias("doc_id"),
-        ((F.col("id") - F.col("id") % 4) % vocab_groups).cast("int").alias("grp"),
-        F.concat(body, tail).alias("text"),
     )
 
 

@@ -1,15 +1,5 @@
-"""Corpus generator determinism + byte-identical text extraction
-(the BASELINE per-row invariant)."""
+"""Corpus generator determinism, golden-triple shape, and width folding."""
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-from research_on_document_level_person_relation_extraction_in_chinese_spark.functions.text import (
-    detect_language,
-    extract_text,
-    text_sha256,
-)
 from research_on_document_level_person_relation_extraction_in_chinese_spark.sources.corpus import (
     generate_corpus,
     golden_triples,
@@ -27,23 +17,6 @@ def test_make_doc_deterministic():
     assert c != a
 
 
-def test_extraction_byte_identity():
-    """extract_text(html) must equal the generator's text, per url, by hash."""
-    for doc_id in range(200):
-        row, _ = make_doc(doc_id, seed=42)
-        extracted = extract_text(row["html"])
-        assert text_sha256(extracted) == text_sha256(row["text"]), row["url"]
-
-
-def test_language_detection_matches_label():
-    hits = total = 0
-    for doc_id in range(200):
-        row, _ = make_doc(doc_id, seed=42)
-        total += 1
-        hits += detect_language(row["text"]) == row["lang"]
-    assert hits / total > 0.95
-
-
 def test_corpus_distributed_generation_partition_invariant(spark):
     df2 = generate_corpus(spark, 100, seed=42, partitions=2)
     df8 = generate_corpus(spark, 100, seed=42, partitions=8)
@@ -51,22 +24,6 @@ def test_corpus_distributed_generation_partition_invariant(spark):
     b = sorted(df8.select("url", "text", "lang").collect())
     assert a == b
     assert df2.columns == ["url", "warc_ts", "html", "text", "lang"]
-
-
-def test_spark_extraction_udf_hash_parity(spark):
-    """Distributed extraction over html reproduces the text column exactly."""
-
-    @pandas_udf("string")
-    def extract(html: pd.Series) -> pd.Series:
-        return html.map(extract_text)
-
-    df = generate_corpus(spark, N, seed=42)
-    mismatches = (
-        df.withColumn("extracted", extract(F.col("html")))
-        .where(F.sha2(F.col("extracted"), 256) != F.sha2(F.col("text"), 256))
-        .count()
-    )
-    assert mismatches == 0
 
 
 def test_golden_shape(spark):

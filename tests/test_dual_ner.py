@@ -95,63 +95,6 @@ def test_union_covers_llm_dropout(ref):
     assert ckip != gemini
 
 
-def test_ner_overlap_audit(spark, expanded):
-    """The reference's overlap() audit as one aggregation: identities hold
-    (union = ckip + clean-gemini − intersection) and hallucinations exist
-    (the score_ner_llm noise path) but are a small minority."""
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.diagnostics import (
-        ner_overlap_audit,
-    )
-
-    row = ner_overlap_audit(expanded).collect()[0]
-    assert row["ckip_count"] > 0 and row["gemini_count"] > 0
-    assert (
-        row["union_count"]
-        == row["ckip_count"] + row["gemini_count"] - row["intersection"]
-    )
-    assert 0 <= row["gemini_hallucination"] < 0.1 * row["gemini_count"]
-    # CKIP keeps title-suffixed surface forms the LLM normalizes away, so
-    # the intersection is strictly smaller than either source
-    assert row["intersection"] < row["ckip_count"]
-
-
-def test_ner_overlap_audit_multiplicity_reference_parity(spark, expanded):
-    """multiplicity=True must be BIT-compatible with the reference's
-    nested-loop counting (gemini_expansion.py:253-267): re-derive the five
-    numbers with a literal per-doc Python loop over the same rows."""
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.diagnostics import (
-        ner_overlap_audit,
-    )
-
-    rows = (
-        expanded.filter(F.size("merge_label") > 0)
-        .select("trad_text", "ckip_entity", "gemini_ner")
-        .collect()
-    )
-    ck_total = gm_total = hall = inter = 0
-    for r in rows:
-        ck, gm, doc = list(r["ckip_entity"]), list(r["gemini_ner"]), r["trad_text"]
-        ck_total += len(ck)
-        gm_total += len(gm)
-        for c in ck:
-            for g in gm:
-                if g not in doc:
-                    hall += 1
-                    continue
-                if c == g:
-                    inter += 1
-    got = ner_overlap_audit(expanded, multiplicity=True).collect()[0]
-    assert got["ckip_count"] == ck_total
-    assert got["gemini_hallucination"] == hall
-    assert got["gemini_count"] == gm_total - hall
-    assert got["intersection"] == inter
-    assert got["union_count"] == ck_total + gm_total - hall - inter
-    # the multiplied counting really differs from the set-semantics default
-    # whenever hallucinations co-occur with >1 ckip mention
-    dflt = ner_overlap_audit(expanded).collect()[0]
-    assert dflt["gemini_hallucination"] <= got["gemini_hallucination"]
-
-
 def test_single_source_default_unchanged(spark, docs, expanded):
     """ner_sources=('ckip',) (the flagship default) produces identical
     merge_label output to the multi-source run — the extra sources are

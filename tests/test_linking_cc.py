@@ -1,10 +1,17 @@
-"""Entity-linking internals: blocking, similarity edges, connected components."""
+"""Entity-linking internals: blocking, similarity edges, connected components,
+and fuzzy linking end to end against a Python union-find."""
 
 from pyspark.sql import functions as F
 
+from perfbench.inputs import link_oracle, link_tables, norm_mention
+from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.graph import (
+    build_edges,
+    build_nodes,
+)
 from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.linking import (
     connected_components,
     fuzzy_mention_edges,
+    link_entities,
     mention_edges,
     normalize_mention,
 )
@@ -185,3 +192,27 @@ def test_connected_components_two_components_and_dups(spark):
     comp = {r["id"]: r["component"] for r in connected_components(vertices, edges).collect()}
     assert comp["a"] == comp["b"] == comp["c"] == "a"
     assert comp["x"] == comp["y"] == comp["z"] == "x"
+
+
+def test_fuzzy_linking_nodes_edges_match_union_find(spark):
+    """Seeded open-vocabulary mentions (Taiwan surname shares, titled and
+    nickname aliases) → salted fuzzy linking with the context guard →
+    build_nodes/build_edges, equal to the plain-Python union-find."""
+    docs, triples = link_tables(seed=7, n_docs=120, n_people=90)
+    mentions = spark.createDataFrame(docs, "url string, ckip_entity array<string>")
+    triple_df = spark.createDataFrame(triples, "url string, subj string, obj string, rel string")
+    linked = link_entities(mentions, fuzzy=True, use_context=True, n_salt=4)
+    nodes = build_nodes(linked).collect()
+    edges = build_edges(triple_df, linked, build_nodes(linked)).collect()
+
+    canon = {r["person_id"]: r["canonical_name"] for r in nodes}
+    got_nodes = {(r["canonical_name"], tuple(r["aliases"]), r["n_docs"]) for r in nodes}
+    got_edges = {
+        (canon[r["subj_id"]], canon[r["obj_id"]], r["rel"], r["n_docs"], tuple(r["example_urls"]))
+        for r in edges
+    }
+    want_nodes, want_edges = link_oracle(docs, triples)
+    assert got_nodes == want_nodes
+    assert got_edges == want_edges
+    # the fixture must exercise fuzzy merges, not only exact-norm ones
+    assert any(len({norm_mention(a) for a in aliases}) > 1 for _, aliases, _ in want_nodes)

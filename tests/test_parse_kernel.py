@@ -18,8 +18,6 @@ from research_on_document_level_person_relation_extraction_in_chinese_spark.func
 from research_on_document_level_person_relation_extraction_in_chinese_spark.functions.analysis import (
     expansion_pairs,
     generate_pairs,
-    min_char_distance,
-    sentence_cooccurrence,
 )
 
 
@@ -123,11 +121,3 @@ def test_expansion_density_caps():
     # density cap: 3 names in a 100-char doc → 3.0/100 chars > 1.9 → high
     doc3 = "甲甲乙乙丙丙" + "x" * 94
     assert expansion_pairs(["甲甲", "乙乙", "丙丙"], set(), doc3)[0] == "high"
-
-
-def test_cooccurrence_and_distance():
-    doc = "甲甲與乙乙見面。丙丙在家。"
-    assert sentence_cooccurrence(doc, "甲甲", "乙乙")
-    assert not sentence_cooccurrence(doc, "甲甲", "丙丙")
-    assert min_char_distance("甲甲xx乙乙", "甲甲", "乙乙") == 2
-    assert min_char_distance("甲甲xx乙乙", "甲甲", "丁丁") == -1

@@ -1,5 +1,5 @@
-"""End-to-end pipeline: golden accuracy, reference parity (the P/R ≥ 0.95
-gate of BASELINE.json), linking/graph consistency, checkpoint/resume."""
+"""End-to-end pipeline: golden accuracy, exact reference parity,
+linking/graph consistency, checkpoint/resume."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,16 +55,15 @@ def test_accuracy_vs_golden(spark, docs, triples):
 
 
 def test_parity_vs_reference_logic(spark, docs, triples):
-    """BASELINE gate: Spark pipeline reproduces the reference-logic run."""
+    """The Spark pipeline emits exactly the reference-logic run's triple set
+    (BASELINE.json's parity metric, checked as set equality)."""
     rows = docs.select("url", "text", "lang").collect()
-    ref = run_reference_logic([r.asDict() for r in rows])
-    ref_df = spark.createDataFrame(
-        ref["merge"], schema="url string, subj string, obj string, rel string"
+    want = set(run_reference_logic([r.asDict() for r in rows])["merge"])
+    got = {tuple(r) for r in triples.collect()}
+    assert got == want, (
+        f"spark-only={sorted(got - want)[:5]} port-only={sorted(want - got)[:5]}"
     )
-    res = evaluate_triples(triples, ref_df)
-    print("parity eval:", res)
-    assert res["precision"] >= 0.95, res
-    assert res["recall"] >= 0.95, res
+    assert len(want) > 300
 
 
 def test_linking_and_graph(spark, docs):

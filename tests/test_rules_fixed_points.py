@@ -100,3 +100,21 @@ def test_find_instances_literal_prefilter_equivalent():
             assert R.find_instances(t, include_expansion_only=flag) == ref(
                 t, include_expansion_only=flag
             )
+
+
+def test_template_fragments_with_metacharacters_match_verbatim():
+    """A template fragment holding regex metacharacters (``(`` and ``.``)
+    matches only itself, so a text containing the filled template is found
+    and the prefilter literal is in that text; a text that only a
+    metacharacter reading would accept is not matched."""
+    from research_on_document_level_person_relation_extraction_in_chinese_spark.scorers import (
+        rules as R,
+    )
+
+    fmt = "{A}(又名{B}.)出席了活動。"
+    rx = R._template_regex(fmt)
+    text = "今天陳大文(又名陳小明.)出席了活動。"
+    m = rx.search(text)
+    assert m is not None and m.groups() == ("陳大文", "陳小明")
+    assert R._longest_literal(fmt) in text
+    assert rx.search("今天陳大文又名陳小明X)出席了活動。") is None

@@ -1,25 +1,11 @@
-"""P7 class-balanced sampling (distributed exact hash rank), S3 CCNet JSONL
-scan, and the F7 CSV-compat JSON export edge."""
-
-import json
+"""P7 class-balanced sampling (distributed exact hash rank)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from research_on_document_level_person_relation_extraction_in_chinese_spark.functions.jsonio import (
-    export_csv_compat,
-    import_csv_compat,
-)
-from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.parse import (
-    TERNARY_T,
-)
 from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.training import (
     class_balanced_pairs,
     hash_balanced_sample,
-)
-from research_on_document_level_person_relation_extraction_in_chinese_spark.sources.ccnet import (
-    ccnet_to_docs,
-    read_ccnet_jsonl,
 )
 
 
@@ -91,47 +77,3 @@ def test_balanced_matches_global_sort_rank(spark, labeled):
     )
     assert got == want
 
-
-# --- CCNet JSONL scan ---------------------------------------------------------
-
-def test_read_ccnet_jsonl(spark, tmp_path):
-    lines = [
-        {"url": "https://a/1", "title": "t1", "raw_content": "陳大文是陳小明的長子。"},
-        {"url": "https://a/2", "title": "t2", "raw_content": "The committee met and discussed the budget."},
-    ]
-    p = tmp_path / "shard.jsonl"
-    with open(p, "w", encoding="utf-8") as f:
-        for line in lines:
-            f.write(json.dumps(line, ensure_ascii=False) + "\n")
-        f.write("{not valid json\n")  # malformed line must be dropped
-
-    df = read_ccnet_jsonl(spark, str(p))
-    rows = {r["url"]: r for r in df.collect()}
-    assert set(rows) == {"https://a/1", "https://a/2"}
-    assert rows["https://a/1"]["raw_content"] == "陳大文是陳小明的長子。"
-
-    docs = ccnet_to_docs(df)
-    langs = {r["url"]: r["lang"] for r in docs.collect()}
-    assert langs["https://a/1"] == "zh"
-    assert langs["https://a/2"] == "en"
-
-
-# --- F7 CSV-compat export edge -------------------------------------------------
-
-def test_json_export_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("u1", [("陳大文", "陳小明", "親屬")]), ("u2", [])],
-        f"url string, merge_label {TERNARY_T.replace('array', 'array', 1)}",
-    )
-    exported = export_csv_compat(df, ["merge_label"])
-    assert dict(exported.dtypes)["merge_label"] == "string"
-    cell = exported.where(F.col("url") == "u1").collect()[0]["merge_label"]
-    assert "陳大文" in cell  # raw UTF-8, not \u escapes (ensure_ascii=False)
-    # survives an actual CSV file round trip
-    out = str(tmp_path / "export_csv")
-    exported.write.mode("overwrite").option("header", True).csv(out)
-    back_raw = spark.read.option("header", True).csv(out)
-    back = import_csv_compat(back_raw, {"merge_label": TERNARY_T})
-    got = {r["url"]: r["merge_label"] for r in back.collect()}
-    assert [tuple(t) for t in got["u1"]] == [("陳大文", "陳小明", "親屬")]
-    assert got["u2"] == []

@@ -1,9 +1,8 @@
-"""M3 (TAIDE) / M4 (few-shot) annotator variants + the F12 prompt schema:
+"""M3 (TAIDE) / M4 (few-shot) annotator variants:
 variant answers flow through the shared parse kernel, agree with the
 standard annotators on non-blind templates, and compose a 3-annotator
 detection stage in Spark."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from research_on_document_level_person_relation_extraction_in_chinese_spark.functions.parse import (
@@ -18,9 +17,6 @@ from research_on_document_level_person_relation_extraction_in_chinese_spark.oper
 )
 from research_on_document_level_person_relation_extraction_in_chinese_spark.scorers import (
     deterministic as det,
-)
-from research_on_document_level_person_relation_extraction_in_chinese_spark.scorers import (
-    prompts,
 )
 from research_on_document_level_person_relation_extraction_in_chinese_spark.sources.corpus import (
     generate_corpus,
@@ -155,21 +151,3 @@ def test_attempts_column_surfaced(spark):
         F.min("gemini_attempts").alias("lo"), F.max("gemini_attempts").alias("hi")
     ).collect()[0]
     assert row["lo"] >= 1 and row["hi"] <= det.DETECT_MAX_TRIES
-
-
-def test_prompt_schema_placeholders():
-    """Every template keeps the placeholders its call site fills — the
-    formatted prompt is the scorer's input contract."""
-    assert "{document}" in prompts.DETECT_PROMPT
-    assert "{document}" in prompts.DETECT_PROMPT_TAIDE
-    assert "{document}" in prompts.DETECT_PROMPT_FEWSHOT
-    for ph in ("{re_num}", "{document}", "{relation_text}", "{ans_format}"):
-        assert ph in prompts.VERIFY_PROMPT
-    assert "{relation}" in prompts.TAXONOMY_PROMPT
-    for ph in ("{name_pairs}", "{document}", "{ans_format}"):
-        assert ph in prompts.PAIR_BATCH_PROMPT
-    for ph in ("{person1}", "{person2}", "{document}"):
-        assert ph in prompts.RE_PAIR_PROMPT
-    # the few-shot exemplar answer itself honors the answer schema it teaches
-    triples, _, _, err = parse_triples(prompts.FEWSHOT_EXEMPLAR_ANS, tolerant=True)
-    assert not err and triples == [("林美玲", "陳大文", "妻子")]

@@ -1,46 +1,14 @@
-"""Salted join correctness under skew, watermarked streaming windows vs the
-batch oracle, and k-fold evaluation."""
+"""Watermarked streaming windows vs the batch oracle, and k-fold evaluation."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.evaluate import (
     kfold_prf,
 )
-from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.skew import (
-    salted_join,
-)
 from research_on_document_level_person_relation_extraction_in_chinese_spark.streaming.events import (
     stream_windowed_counts,
     windowed_event_counts,
 )
-
-
-def test_salted_join_matches_plain_join(spark):
-    # 90% of rows share one hot key — the adversarial case
-    big = spark.range(0, 10000).select(
-        F.when(F.col("id") % 10 < 9, "陳").otherwise(F.concat(F.lit("k"), F.col("id") % 7)).alias("key"),
-        F.col("id").alias("v"),
-    )
-    small = spark.createDataFrame(
-        [("陳", 1), ("k0", 2), ("k3", 3), ("absent", 4)], "key string, w int"
-    )
-    plain = big.join(small, "key").groupBy("key").agg(
-        F.count("*").alias("n"), F.sum("v").alias("sv"), F.sum("w").alias("sw")
-    )
-    salted = salted_join(big, small, "key", n_salt=8).groupBy("key").agg(
-        F.count("*").alias("n"), F.sum("v").alias("sv"), F.sum("w").alias("sw")
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    # salt genuinely spreads the hot key
-    spread = (
-        big.withColumn("_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(8)))
-        .where(F.col("key") == "陳")
-        .select("_salt")
-        .distinct()
-        .count()
-    )
-    assert spread == 8
 
 
 def test_streaming_windowed_counts_match_batch(spark, tmp_path):

@@ -65,20 +65,3 @@ def test_train_valid_split(spark, expanded):
     assert 0 < n_v < n_t
     # disjoint + deterministic
     assert train.join(valid, "url", "inner").count() == 0
-
-
-def test_cross_sentence_stats(spark, expanded):
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.diagnostics import (
-        cross_sentence_stats,
-        cross_sentence_summary,
-    )
-
-    stats = cross_sentence_stats(expanded).cache()
-    assert stats.count() > 0
-    # template sentences put both names in one sentence → same_sentence true
-    # for the overwhelming majority; min_distance well-defined (≥0)
-    rate = stats.agg(F.avg(F.col("same_sentence").cast("double"))).collect()[0][0]
-    assert rate > 0.95
-    assert stats.where(F.col("min_distance") < 0).count() == 0
-    summary = cross_sentence_summary(stats)
-    assert {r["rel"] for r in summary.collect()} <= {"親屬", "師生", "同事", "其他"}
