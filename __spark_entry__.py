@@ -38,10 +38,6 @@ from research_on_document_level_person_relation_extraction_in_chinese_spark.oper
 from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.spread import (
     spread_scan as _spread,
 )
-from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.multimodal import (
-    attach_media,
-    extract_features,
-)
 from research_on_document_level_person_relation_extraction_in_chinese_spark.plans.pipeline import (
     extract_triples,
 )
@@ -268,24 +264,6 @@ def q_price_percentiles(spark, sf_dir):
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_extendedprice", F.lit(0.5)), 4).alias("p50"),
         F.round(F.percentile("l_extendedprice", F.lit(0.9)), 4).alias("p90"),
-    )
-
-
-def q_click_attribution(spark, sf_dir):
-    """Interval-join attribution (streaming/joins.py:attribute_clicks, run
-    in batch mode — the same function drives the stream-stream join in
-    ``test_stream_join``): every (view, click) pair of the same user with
-    the click at most 30 minutes after the view. The equality key bounds
-    the shuffle; the time interval bounds streaming state."""
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.streaming.joins import (
-        attribute_clicks,
-    )
-
-    e = _t(spark, sf_dir, "events")
-    return attribute_clicks(
-        e.where(F.col("event_type") == "view"),
-        e.where(F.col("event_type") == "click"),
-        max_delay="30 minutes",
     )
 
 
@@ -846,22 +824,6 @@ def q_dsir_select(spark, sf_dir):
     return dsir_scores(d, F.col("lang") == "en", n_buckets=512)
 
 
-def q_bm25_topk(spark, sf_dir):
-    """BM25 retrieval (operators/ranking.py): Lucene-variant idf, k1=1.2
-    b=0.75, query = [dup, hash, join, spark] (one rare + three common terms
-    so idf spread is real). Two scans, zero shuffles in the scoring path:
-    one bounded stats agg (N, avgdl, per-term df), then a map-only score
-    projection + TakeOrdered top-15. The oracle replays the identical
-    term-ordered IEEE fold."""
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.ranking import (
-        bm25_topk,
-    )
-
-    return bm25_topk(
-        _t(spark, sf_dir, "documents"), ["dup", "hash", "join", "spark"], k=15
-    )
-
-
 def q_countmin_audit(spark, sf_dir):
     """Count-Min sketch heavy-hitter audit (operators/sketches.py): build
     the bounded d=4×width=16 token-frequency sketch (md5 row hashes shared
@@ -947,20 +909,6 @@ def q_exact_median(spark, sf_dir):
     return exact_median(
         _t(spark, sf_dir, "lineitem"), "l_extendedprice", buckets=64, take_threshold=2000
     )
-
-
-def q_lm_perplexity(spark, sf_dir):
-    """CCNet-style LM quality signal (operators/lm.py): add-1-smoothed
-    char-bigram LM trained on the doc_id %% 41 == 0 reference slice, every
-    doc scored by perplexity in ONE map-only pass (model ships as two map
-    literals; the per-doc ln-prob sum is an ordered fold, so both engines
-    agree to the last bit before the 4-dp round)."""
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.lm import (
-        lm_perplexity,
-    )
-
-    d = _spread(_t(spark, sf_dir, "documents"))
-    return lm_perplexity(d, d.where(F.col("doc_id") % 41 == 0))
 
 
 def q_hll_ngrams(spark, sf_dir):
@@ -1076,7 +1024,7 @@ def q_paragraph_dedup(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# KG pipeline + multimodal plumbing. Formerly rows-only; now VALUE-gated
+# KG pipeline. Formerly rows-only; now VALUE-gated
 # against the plain-Python port fixtures (plans/port_fixtures.py — the
 # committed parquet under fixtures/port/ holds the independently-computed
 # expected sets, regenerated by scripts/gen_port_fixtures.py and staleness-
@@ -1369,100 +1317,6 @@ def q_kg_union_expansion(spark, sf_dir):
     )
 
 
-def q_media_features(spark, sf_dir):
-    """Arrow-batched media feature extraction, now VALUE-gated (round 4):
-    restricted to printable-ASCII docs (absolute \\A..\\z anchors — the
-    frame_samples parity trick) so the byte-domain fake decode (histogram
-    bucket 0 = bytes ≡ 0 mod 8, + md5-derived jitter) is replayable in DuckDB
-    with per-row scalar math: regexp char-class count for the histogram,
-    '0x'||substr(md5(text),1,8) for the jitter seed — bit-identical doubles,
-    no sum-order noise. The all-docs (binary, non-ASCII) plumbing stays
-    exercised by tests/test_multimodal_streaming.py."""
-    d = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 100)
-        .where(F.col("text").rlike(r"\A[\x20-\x7e]*\z"))
-    )
-    feats = extract_features(attach_media(d), dims=8)
-    return feats.select(
-        "doc_id", "n_bytes", F.round(F.element_at("features", 1), 6).alias("f0")
-    )
-
-
-def q_frame_samples(spark, sf_dir):
-    """Video frame sampling, fully JVM-side (explode every-k frame index +
-    byte-range slice of the payload) — the prune-before-decode stage of the
-    multimodal pipeline. ASCII-only docs so the byte-domain Spark slicing and
-    the char-domain DuckDB oracle agree exactly."""
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.multimodal import (
-        sample_frames,
-    )
-
-    # absolute anchors \A..\z: Java's $ matches BEFORE a final \n, DuckDB's
-    # regexp_full_match does not — a trailing-newline doc must fail both
-    d = _t(spark, sf_dir, "documents").where(
-        (F.col("doc_id") < 50) & F.col("text").rlike("\\A[\\x20-\\x7e]*\\z")
-    )
-    media = attach_media(d, media_type="video", n_frames=4)
-    return sample_frames(media, every_k=2).select(
-        "doc_id",
-        "frame_idx",
-        F.md5(F.col("frame_payload")).alias("frame_md5"),
-        F.length("frame_payload").cast("long").alias("frame_len"),
-    )
-
-
-def q_image_resize(spark, sf_dir):
-    """END-TO-END real image decode + resize (operators/multimodal.py):
-    each doc gets a REAL 16x12 24-bit BMP payload (pure-Python encode_bmp,
-    gray value v(doc_id,x,y) = (doc_id*7 + y*31 + x*3) % 256), the
-    resize stage decodes it with the pure-Python BMP decoder (magic-byte
-    dispatch in decode_image — no registered codec, no fake) and
-    nearest-neighbor resamples to 8x8 in one Arrow mapInPandas pass. The
-    oracle NEVER touches BMP: it recomputes the expected resized pixels
-    from the closed-form v() + the nearest-neighbor index map
-    ((i*12)//8, (j*16)//8) and md5s the same comma-joined serialization —
-    so a green row proves encoder, decoder (padding, bottom-up rows, BGR
-    order) and resampler are pixel-exact, round-trip, end to end."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.multimodal import (
-        encode_bmp,
-        resize_images,
-    )
-
-    def _make(doc_ids):
-        out = []
-        for did in doc_ids:
-            y, x = np.mgrid[0:12, 0:16]
-            v = ((int(did) * 7 + y * 31 + x * 3) % 256).astype(np.uint8)
-            out.append(encode_bmp(np.stack([v, v, v], axis=-1)))
-        return pd.Series(out)
-
-    make_bmp = pandas_udf(_make, "binary")
-
-    d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 40)
-    media = d.select(
-        "doc_id",
-        make_bmp("doc_id").alias("payload"),
-        F.struct(
-            F.lit(16).alias("width"),
-            F.lit(12).alias("height"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(1).alias("n_frames"),
-        ).alias("meta"),
-    )
-    resized = resize_images(media, width=8, height=8)
-    px_str = F.array_join(
-        F.transform("pixels", lambda v: v.cast("int").cast("string")), ","
-    )
-    return resized.select(
-        "doc_id", F.md5(px_str).alias("pix_md5"), "out_w", "out_h"
-    )
-
-
 def q_weighted_sample(spark, sf_dir):
     """Priority sampling (operators/training.py:priority_sample): top-100
     docs by w/u priority with w = byte length of the text, plus the
@@ -1549,11 +1403,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     how stale their last driver row is. Round-6 prefix = the 32 entries
     whose newest row is CORRECTNESS_r04 (the 30 rotated past slot 50 in r5
     plus balanced_sample / simhash_near_dups, which sat at r5 positions
-    51-52 because the r5 prefix miscounted at 52 — r5 advice), then 18
+    51-52 because the r5 prefix miscounted at 52 — r5 advice), then 16
     r5-verified entries whose COMPUTE PATH CHANGED in this optimization
-    round (scan-dedup persists, sketch/lm/bm25 restructures, the consensus
+    round (scan-dedup persists, sketch restructures, the consensus
     pre-filter, priority-sample single scan) incl. the r5 noise watch items
-    bm25_topk / countmin_audit / semdedup. The 32 rotated past slot 50 all
+    countmin_audit / semdedup. The 32 rotated past slot 50 all
     have green r5 rows; the pytest oracle gate replays ALL entries every
     run."""
     return {
@@ -1591,14 +1445,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "balanced_sample": q_balanced_sample,
         "simhash_near_dups": q_simhash_near_dups,
         # --- tier B: r5-verified, compute path CHANGED this round (incl.
-        # the r5 noise watch items bm25/countmin/semdedup) ---
-        "bm25_topk": q_bm25_topk,
+        # the r5 noise watch items countmin/semdedup) ---
         "countmin_audit": q_countmin_audit,
         "semdedup": q_semdedup,
         "bloom_decontaminate": q_bloom_decontaminate,
         "dsir_select": q_dsir_select,
         "hll_ngrams": q_hll_ngrams,
-        "lm_perplexity": q_lm_perplexity,
         "kmeans_centroids": q_kmeans_centroids,
         "ngram_jaccard_prefix": q_ngram_jaccard_prefix,
         "ngram_jaccard": q_ngram_jaccard,
@@ -1626,16 +1478,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_communities": q_kg_communities,
         "kg_khop": q_kg_khop,
         "kg_triangles": q_kg_triangles,
-        "frame_samples": q_frame_samples,
-        "image_resize": q_image_resize,
         "url_canonicalize": q_url_canonicalize,
         "gopher_quality": q_gopher_quality,
         "dedup_groups": q_dedup_groups,
         "kg_nodes": q_kg_nodes,
         "kg_edges": q_kg_edges,
         "kg_pagerank": q_kg_pagerank,
-        "media_features": q_media_features,
-        "click_attribution": q_click_attribution,
         "exact_median": q_exact_median,
         "width_normalize": q_width_normalize,
         "snapshot_diff": q_snapshot_diff,
@@ -1765,58 +1613,6 @@ def _kmeans_sql(k: int = 8, iters: int = 4, dim: int = 64) -> str:
     LEFT JOIN census n USING (cid)"""
     )
     return "".join(parts)
-
-
-def _bm25_sql(
-    terms: list[str], k: int = 15, k1: float = 1.2, b: float = 0.75
-) -> str:
-    """Oracle for ``bm25_topk`` (ranking.py): replays the identical
-    IEEE-double recurrence — one stats pass (N, avgdl = one double division,
-    per-term df), libm ``ln`` idf (the same libm the driver's ``math.log``
-    calls, the ``dsir_select`` precedent), and the term-ordered left-assoc
-    score fold, rounded to 6 dp."""
-    nt = len(terms)
-    tf_cols = ",\n               ".join(
-        f"CAST(len(list_filter(ws, w -> w = '{t}')) AS DOUBLE) AS tf{i}"
-        for i, t in enumerate(terms)
-    )
-    df_cols = ",\n               ".join(
-        f"SUM(CAST(tf{i} > 0 AS BIGINT)) AS df{i}" for i in range(nt)
-    )
-    idf_cols = ",\n               ".join(
-        f"ln(1.0 + (n - df{i} + 0.5) / (df{i} + 0.5)) AS idf{i}" for i in range(nt)
-    )
-    hits = " + ".join(f"CAST(tf{i} > 0 AS INT)" for i in range(nt))
-    norm = f"{k1!r} * ({1.0 - b!r} + {b!r} * dl / avgdl)"
-    score = "0.0 + " + " + ".join(
-        f"idf{i} * tf{i} * {k1 + 1.0!r} / (tf{i} + {norm})" for i in range(nt)
-    )
-    return f"""
-    WITH d AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                           w -> w <> '') AS ws
-        FROM documents
-    ), t AS (
-        SELECT doc_id, len(ws) AS dl,
-               {tf_cols}
-        FROM d
-    ), s AS (
-        SELECT count(*) AS n, CAST(SUM(dl) AS DOUBLE) / count(*) AS avgdl,
-               {df_cols}
-        FROM t
-    ), i AS (
-        SELECT avgdl,
-               {idf_cols}
-        FROM s
-    )
-    SELECT doc_id, n_terms_hit, bm25 FROM (
-        SELECT t.doc_id,
-               {hits} AS n_terms_hit,
-               round({score}, 6) AS bm25
-        FROM t, i
-    ) WHERE n_terms_hit > 0
-    ORDER BY bm25 DESC, doc_id LIMIT {k}"""
 
 
 def _semdedup_sql(
@@ -2202,19 +1998,6 @@ def oracle_sql() -> dict[str, str]:
                    round(quantile_cont(l_extendedprice, 0.9), 4) AS p90
             FROM lineitem GROUP BY l_returnflag
         """,
-        "click_attribution": """
-            SELECT c.user_id,
-                   v.event_id AS view_id,
-                   c.event_id AS click_id,
-                   CAST(floor(epoch(c.ts)) AS BIGINT)
-                   - CAST(floor(epoch(v.ts)) AS BIGINT) AS delay_sec,
-                   c.value AS click_value
-            FROM events v JOIN events c
-              ON v.user_id = c.user_id
-             AND c.ts >= v.ts
-             AND c.ts <= v.ts + INTERVAL 30 MINUTE
-            WHERE v.event_type = 'view' AND c.event_type = 'click'
-        """,
         "asof_last_click": """
             SELECT event_id, user_id,
                    CAST(floor(epoch(ts)) - floor(epoch(last_click)) AS BIGINT) AS secs_since_click
@@ -2595,21 +2378,6 @@ def oracle_sql() -> dict[str, str]:
                    round(avg(dupf), 4) AS avg_dup_word_frac,
                    round(avg(topf), 4) AS avg_top_bigram_frac
             FROM k GROUP BY lang, kept
-        """,
-        "frame_samples": """
-            WITH d AS (
-                SELECT doc_id, text FROM documents
-                WHERE doc_id < 50 AND regexp_full_match(text, '[ -~]*')
-            ), fr AS (
-                SELECT doc_id, text,
-                       CAST(floor(length(text) / 4) AS INTEGER) AS stride,
-                       CAST(unnest(generate_series(0, 3, 2)) AS INTEGER) AS frame_idx
-                FROM d
-            )
-            SELECT doc_id, frame_idx,
-                   md5(substr(text, frame_idx * stride + 1, stride)) AS frame_md5,
-                   CAST(length(substr(text, frame_idx * stride + 1, stride)) AS BIGINT) AS frame_len
-            FROM fr
         """,
         "dedup_groups": f"""
             WITH RECURSIVE sh2 AS (
@@ -3075,7 +2843,6 @@ def oracle_sql() -> dict[str, str]:
         "kg_pagerank_values": _pagerank_sql(iters=10, damping=0.85),
         "kmeans_centroids": _kmeans_sql(k=8, iters=4, dim=64),
         "semdedup": _semdedup_sql(k=8, iters=2, dim=64, threshold=0.35),
-        "bm25_topk": _bm25_sql(["dup", "hash", "join", "spark"], k=15),
         "snapshot_diff": """
             WITH o AS (
                 SELECT user_id, event_type,
@@ -3125,55 +2892,6 @@ def oracle_sql() -> dict[str, str]:
                        + (SELECT x FROM r, nn WHERE rn = (nn.n + 2) // 2)
                    ) / 2.0, 4) AS median
             FROM nn
-        """,
-        "lm_perplexity": """
-            WITH cs AS (
-                SELECT doc_id, lang, string_split(text, '') AS cs FROM documents
-            ),
-            bg AS (
-                SELECT doc_id, lang,
-                       list_transform(range(1, len(cs)),
-                           i -> struct_pack(a := cs[i], b := cs[i + 1])) AS bgs
-                FROM cs
-            ),
-            rc AS (
-                SELECT u.a AS a, u.b AS b, count(*) AS c FROM (
-                    SELECT unnest(bgs) AS u FROM bg WHERE doc_id % 41 = 0
-                ) GROUP BY u.a, u.b
-            ),
-            ctx AS (SELECT a, SUM(c) AS ca FROM rc GROUP BY a),
-            vv AS (
-                SELECT count(*) + 1 AS v FROM (
-                    SELECT a AS ch FROM rc UNION SELECT b FROM rc
-                )
-            ),
-            pm AS (
-                SELECT map(list(k ORDER BY k), list(lnp ORDER BY k)) AS m FROM (
-                    SELECT rc.a || rc.b AS k,
-                           ln((rc.c + 1) / (ctx.ca + vv.v)) AS lnp
-                    FROM rc JOIN ctx USING (a), vv
-                )
-            ),
-            dm AS (
-                SELECT map(list(a ORDER BY a), list(lnd ORDER BY a)) AS m FROM (
-                    SELECT a, ln(ca + vv.v) AS lnd FROM ctx, vv
-                )
-            ),
-            sc AS (
-                SELECT doc_id, lang, CAST(len(bgs) AS BIGINT) AS n_bigrams,
-                       list_reduce(
-                           list_prepend(CAST(0.0 AS DOUBLE),
-                               list_transform(bgs,
-                                   s -> COALESCE(
-                                       map_extract(pm.m, s.a || s.b)[1],
-                                       -COALESCE(map_extract(dm.m, s.a)[1],
-                                                 ln(vv.v))))),
-                           (acc, x) -> acc + x) AS ss
-                FROM bg, pm, dm, vv
-            )
-            SELECT doc_id, lang, n_bigrams,
-                   round(exp(-ss / n_bigrams), 4) AS ppl
-            FROM sc WHERE n_bigrams > 0
         """,
         # HLL p=8: m=256, w_bits=52, k=53; alpha*m*m and 2^53 inlined from
         # the same Python floats sketches.py ships to Spark
@@ -3278,37 +2996,6 @@ def oracle_sql() -> dict[str, str]:
             FROM ue e1
             JOIN ue e2 ON e1.b = e2.a
             JOIN ue e3 ON e1.a = e3.a AND e2.b = e3.b
-        """,
-        "media_features": """
-            SELECT doc_id,
-                   CAST(length(text) AS BIGINT) AS n_bytes,
-                   CASE WHEN length(text) = 0 THEN 0.0
-                        ELSE ROUND(ROUND(
-                            CAST(length(text) - length(regexp_replace(
-                                     text, '[ (08@HPX`hpx]', '', 'g')) AS DOUBLE)
-                              / CAST(length(text) AS DOUBLE)
-                            + (CAST('0x' || substr(md5(text), 1, 8) AS BIGINT)
-                               / 4294967296.0) * 1e-6,
-                        9), 6) END AS f0
-            FROM documents
-            WHERE doc_id < 100 AND regexp_full_match(text, '[ -~]*')
-        """,
-        # image_resize: the oracle recomputes the EXPECTED resized pixels
-        # from the closed-form pixel function + the nearest-neighbor index
-        # map — it never parses BMP, so a hash match proves the pure-Python
-        # encoder/decoder/resampler round-trip is pixel-exact.
-        "image_resize": """
-            SELECT doc_id,
-                   md5(string_agg(CAST(v AS VARCHAR), ',' ORDER BY i, j, c)) AS pix_md5,
-                   8 AS out_w, 8 AS out_h
-            FROM (
-                SELECT d.doc_id, i.range AS i, j.range AS j, c.range AS c,
-                       (d.doc_id * 7 + ((i.range * 12) // 8) * 31
-                        + ((j.range * 16) // 8) * 3) % 256 AS v
-                FROM documents d, range(8) i, range(8) j, range(3) c
-                WHERE d.doc_id < 40
-            )
-            GROUP BY doc_id
         """,
         # weighted_sample: full bit-exact replay of priority sampling — the
         # uniform is (h+1)/2^32 (exact), the threshold one IEEE division,

@@ -16,7 +16,8 @@ Layout
   (checkpointed stage tables with lineage + metrics).
 - ``operators/``  pipeline stages (fused annotate/parse and consensus,
   taxonomy, expansion, replay, linking, graph, evaluate) + training-data
-  ops (dedup, similarity, text analysis, multimodal).
+  ops (dedup, similarity, text analysis) that only the query registry
+  reaches.
 - ``plans/``      end-to-end pipeline runner with per-stage checkpoint/resume.
 - ``streaming/``  Structured-Streaming ingest variant.
 """

@@ -19,8 +19,7 @@ Canonical form produced:
 The ``url_canonicalize`` driver query feeds DECORATED urls (upper-cased
 host, ``:80``, shuffled params, ``gclid``, empty param, fragment) through
 this general canonicalizer and the DuckDB oracle states the expected
-canonical CLOSED-FORM from (doc_id, source) — same independence discipline
-as ``image_resize``.
+canonical CLOSED-FORM from (doc_id, source).
 """
 
 from __future__ import annotations

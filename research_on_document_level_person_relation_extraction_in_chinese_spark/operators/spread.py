@@ -3,10 +3,10 @@
 A parquet file with one row group reads as ONE task no matter how many
 cores the cluster has (Spark splits files by byte ranges, but a row group
 is indivisible), so every CPU-heavy map pass downstream of such a scan —
-per-row md5/minhash signatures, n-gram explodes, LM scoring folds, vector
+per-row md5/minhash signatures, n-gram explodes, scoring folds, vector
 arithmetic — serializes on one core. Measured on this host at sf0.1
 (documents/part/embeddings are each one row group): hll_ngrams 3.19 s → 0.95 s,
-lm_perplexity 3.12 → 1.63, dsir_select 1.28 → 0.66 once the scan is spread
+dsir_select 1.28 → 0.66 once the scan is spread
 to the session's parallelism; at a 4× synthetic scale the un-spread
 hll_ngrams degraded superlinearly (35 s) because 4× the work still ran on
 one task.

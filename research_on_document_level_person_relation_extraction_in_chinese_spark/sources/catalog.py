@@ -33,6 +33,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _write_json(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON atomically: serialise first,
+    write a temp file in the same directory, then ``os.replace`` it over the
+    old file — a failed serialisation or a crash mid-write leaves the old
+    file whole."""
+    text = json.dumps(obj, ensure_ascii=False, indent=1)
+    tmp = f"{path}.tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def _has_data_files(path: str) -> bool:
+    """True when ``path`` holds a file Spark's file listing would read:
+    names starting with ``.`` or ``_`` (``_SUCCESS``, ``_temporary``) are
+    skipped, ``_k=v`` partition directories are not."""
+    for _, dirs, files in os.walk(path):
+        dirs[:] = [
+            d for d in dirs
+            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+        ]
+        if any(not f.startswith((".", "_")) for f in files):
+            return True
+    return False
+
+
 class StageCatalog:
     def __init__(self, root: str):
         self.root = root
@@ -157,10 +183,8 @@ class StageCatalog:
         # metadata-commit order)
         log = self.snapshots(name)
         log.append(manifest)
-        with open(self._snapshot_log_path(name), "w", encoding="utf-8") as f:
-            json.dump(log, f, ensure_ascii=False, indent=1)
-        with open(self._manifest_path(name), "w", encoding="utf-8") as f:
-            json.dump(manifest, f, ensure_ascii=False, indent=1)
+        _write_json(self._snapshot_log_path(name), log)
+        _write_json(self._manifest_path(name), manifest)
         return snapshot_id
 
     def snapshots(self, name: str) -> list[dict]:
@@ -178,8 +202,7 @@ class StageCatalog:
         so lineage records that it happened."""
         for snap in self.snapshots(name):
             if snap["snapshot_id"] == snapshot_id:
-                with open(self._manifest_path(name), "w", encoding="utf-8") as f:
-                    json.dump(snap, f, ensure_ascii=False, indent=1)
+                _write_json(self._manifest_path(name), snap)
                 return
         raise KeyError(f"stage {name!r} has no snapshot {snapshot_id!r}")
 
@@ -203,8 +226,7 @@ class StageCatalog:
             if snap["data_dir"] != self._path(name):
                 shutil.rmtree(snap["data_dir"], ignore_errors=True)
             expired.append(sid)
-        with open(self._snapshot_log_path(name), "w", encoding="utf-8") as f:
-            json.dump(kept, f, ensure_ascii=False, indent=1)
+        _write_json(self._snapshot_log_path(name), kept)
         return expired
 
     def append_partial(self, df: DataFrame, name: str) -> None:
@@ -281,13 +303,11 @@ class StageCatalog:
 def resume_filter(df: DataFrame, catalog: StageCatalog, stage: str, key: str = "url") -> DataFrame:
     """Document-level resume: drop rows whose ``key`` already exists in a
     (possibly partial) prior output of ``stage`` — a distributed anti-join,
-    never a driver-side set."""
+    never a driver-side set. Only a stage with no committed data file (no
+    directory, or an interrupted first chunk's ``_temporary`` alone) counts
+    as nothing done; any read error on committed files propagates."""
     path = catalog._data_dir(stage)
-    spark = df.sparkSession
-    if not os.path.exists(path):
+    if not _has_data_files(path):
         return df
-    try:
-        done = spark.read.parquet(path).select(key)
-    except Exception:
-        return df
+    done = df.sparkSession.read.parquet(path).select(key)
     return df.join(done, on=key, how="left_anti")

@@ -4,6 +4,8 @@ as_of time-travels, rollback is a metadata flip, expire_snapshots drops old
 data (but never the current snapshot), and the resume/bucket paths still
 work on the versioned layout."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -87,3 +89,32 @@ def test_flat_finalized_stage_isolated_from_new_snapshots(spark, cat):
     cat.write_stage(_rows(spark, range(10)), "s")  # newer, bigger snapshot
     assert cat.read_stage(spark, "s").count() == 10  # current = newest
     assert cat.read_stage(spark, "s", as_of=flat_sid).count() == 3  # no leak
+
+
+def test_failed_commit_keeps_previous_snapshot(spark, cat):
+    """A commit that fails part-way (here: metrics that do not serialise)
+    leaves the snapshot log and the current manifest as they were."""
+    s1 = cat.write_stage(_rows(spark, range(2)), "s1", metrics={"n": 2})
+    with pytest.raises(TypeError):
+        cat.write_stage(_rows(spark, range(5)), "s1", metrics={"n": object()})
+    assert [s["snapshot_id"] for s in cat.snapshots("s1")] == [s1]
+    assert cat.manifest("s1")["snapshot_id"] == s1
+    assert cat.read_stage(spark, "s1").count() == 2
+
+
+def test_resume_filter_empty_vs_unreadable_partial(spark, cat):
+    """No committed data file (only an interrupted chunk's ``_temporary``)
+    means nothing is done yet; a committed file that cannot be read is an
+    error, never "nothing done"."""
+    docs = _rows(spark, range(2))
+    assert resume_filter(docs, cat, "annotated").count() == 2  # no dir yet
+    tmp_dir = os.path.join(cat._path("annotated"), "_temporary", "0")
+    os.makedirs(tmp_dir)
+    with open(os.path.join(tmp_dir, "part-00000.parquet"), "wb") as f:
+        f.write(b"half a chunk")
+    assert resume_filter(docs, cat, "annotated").count() == 2
+
+    with open(os.path.join(cat._path("annotated"), "part-00000.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception):
+        resume_filter(docs, cat, "annotated").count()

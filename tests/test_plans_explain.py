@@ -269,22 +269,6 @@ def test_countmin_sketch_partial_aggregation(spark):
     assert "Cartesian" not in plan and "NestedLoop" not in plan
 
 
-def test_lm_perplexity_scoring_shuffle_free(spark):
-    """lm_perplexity: after the bounded model fit (driver literals), the
-    scoring query itself is a pure projection — no join, no Python, and no
-    DATA-DEPENDENT exchange. The only allowed Exchange is the adaptive
-    round-robin scan spread (operators/spread.py — a single-row-group input
-    file otherwise serializes the scoring fold on one task; at production
-    scale the spread is a no-op and the node disappears)."""
-    import re
-
-    plan = _plan(entry_mod.q_lm_perplexity(spark, SF_DIR))
-    n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
-    n_roundrobin = plan.count("RoundRobinPartitioning")
-    assert n_exchange == n_roundrobin <= 1  # spread only, no hash/range shuffle
-    assert "Join" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
 
 def test_bloom_probe_no_train_side_shuffle_before_filter(spark):
     """bloom_decontaminate: no cartesian/python; the exact-verify join is
@@ -321,17 +305,6 @@ def test_priority_sample_is_takeordered(spark):
     assert "Sort " not in plan.replace("TakeOrderedAndProject", "")
     assert "Scan parquet" not in plan, plan  # one corpus scan, already done
 
-
-def test_image_resize_single_arrow_stage(spark):
-    """Decode→resize is ONE Arrow python stage (mapInPandas); the BMP
-    synthesis UDF is the only other python node — no per-row BatchEval."""
-    import re
-
-    plan = _plan(entry_mod.q_image_resize(spark, SF_DIR))
-    # formatted plans list each node in the tree AND the detail section —
-    # count distinct node ids, not string hits
-    assert len(set(re.findall(r"MapInPandas \((\d+)\)", plan))) == 1
-    assert "BatchEvalPython" not in plan
 
 
 def test_grouped_median_state_broadcast_no_global_sort(spark):
