@@ -2,18 +2,21 @@
 north rule: blocking + pairwise similarity + connected components).
 
 Person mentions (NER surface forms: canonical names, simplified-script
-spellings, title-suffixed aliases) are normalized (title strip + s2t),
-blocked, pairwise-matched within blocks via a self-join, and merged with an
-iterative DataFrame connected-components loop (alternating large-star /
-small-star with per-iteration localCheckpoint — GraphFrames-like, no
-external dependency, O(log n) rounds on any graph shape).
+spellings, title-suffixed aliases) are normalized (title strip + s2t).
+Mentions with equal normalized names are one person by definition, so the
+default (exact) linking is the norm itself and needs no graph pass. Fuzzy
+linking works on the distinct norms: blocked self-join, pairwise
+similarity, then an iterative DataFrame connected-components loop
+(alternating large-star / small-star, GraphFrames-like, no external
+dependency, O(log n) rounds on any graph shape) that stops as soon as the
+edges form a star forest.
 
-Scale notes: blocks are keyed on (surname, name length, 2nd char) — the extra
-character *refines* hot-surname blocks (陳/林/王 skew) without losing recall
-because our similarity requires equal normalized names, which share every
-refined key. For fuzzier similarity, drop the refinement and rely on
-``spark.sql.adaptive.skewJoin`` + key salting (union of salted off-diagonal
-blocks); the block self-join below is written so the block key is pluggable.
+Scale notes: linking norms instead of mentions shrinks the fuzzy self-join
+and the graph by every title and script variant of a name. Hot surname
+blocks (陳/林/王 skew) go through the salted off-diagonal join
+(``_salted_block_pairs``). Each connected-components round pays one
+``localCheckpoint`` (cuts the growing lineage) and one exact star-forest
+test; an input that is already star-shaped pays no round at all.
 """
 
 from __future__ import annotations
@@ -42,14 +45,20 @@ def mention_table(expanded: DataFrame) -> DataFrame:
     )
 
 
-def mention_edges(mentions: DataFrame, refine_blocks: bool = True) -> DataFrame:
+def mention_edges(mentions: DataFrame) -> DataFrame:
     """Blocked self-join producing similarity edges (src, dst) between
-    distinct surface mentions that normalize to the same person."""
+    distinct surface mentions that normalize to the same person.
+
+    Blocks are keyed on (surname, name length, 2nd char): every key is a
+    function of the norm, so equal norms always share a block, and the 2nd
+    character splits the hot-surname blocks. ``link_entities`` does not
+    need these edges (their components are the norm classes); they are the
+    mention-level graph for callers that want it."""
     block = F.concat_ws(
         "|",
         F.substring("norm", 1, 1),
         F.length("norm").cast("string"),
-        *([F.substring("norm", 2, 1)] if refine_blocks else []),
+        F.substring("norm", 2, 1),
     )
     m = mentions.select("mention", "norm").withColumn("block", block)
     a = m.alias("a")
@@ -210,13 +219,21 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relink.union(self_link).where(F.col("src") != F.col("dst")).distinct()
 
 
-def _edges_equal(a: DataFrame, b: DataFrame) -> bool:
-    """Exact set equality of two (already deduped, localCheckpointed) edge
-    frames — a probabilistic checksum could collide and declare convergence
-    one round early, silently splitting an entity."""
-    if a.count() != b.count():
-        return False
-    return a.exceptAll(b).limit(1).count() == 0
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when (src > dst)-canonical edges form a forest of stars: every
+    src has exactly one edge and no vertex is both a src and a dst. Then
+    each dst is its star's centre and, as every src is larger, the minimum
+    of its component — the large-star/small-star fixpoint. Exact: one
+    aggregate over the vertex roles, no comparison with an earlier round."""
+    roles = edges.select(F.col("src").alias("v"), F.lit(1).alias("out")).union(
+        edges.select(F.col("dst").alias("v"), F.lit(0).alias("out"))
+    )
+    return (
+        roles.groupBy("v")
+        .agg(F.sum("out").alias("n_out"), F.count(F.lit(1)).alias("n"))
+        .where((F.col("n_out") > 1) | ((F.col("n_out") == 1) & (F.col("n") > 1)))
+        .isEmpty()
+    )
 
 
 def connected_components(vertices: DataFrame, edges: DataFrame, max_iter: int = 25) -> DataFrame:
@@ -225,24 +242,23 @@ def connected_components(vertices: DataFrame, edges: DataFrame, max_iter: int = 
     id (Kiveris et al. — O(log n) rounds even on long chains, vs the
     O(diameter) of plain min-label propagation).
 
-    Iterative DataFrame joins with ``localCheckpoint`` per round to cut the
-    growing lineage (SURVEY §4 custom item 2). Raises if the edge set has
-    not reached a fixpoint within ``max_iter`` rounds — unconverged labels
-    would silently split entities."""
+    Each round is ``localCheckpoint``ed to cut the growing lineage (SURVEY
+    §4 custom item 2). The loop stops once the edges form a star forest
+    (``_is_star_forest``), tested before every round, so an input that is
+    already star-shaped runs zero rounds. Raises if the edges are still not
+    a star forest after ``max_iter`` rounds — unconverged labels would
+    silently split entities."""
     e = _canonical_edges(edges).localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max_iter):
-        prev_e = e
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} "
+                "large-star/small-star rounds"
+            )
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        if _edges_equal(e, prev_e):
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "large-star/small-star rounds"
-        )
-    # fixpoint edges form stars: src (child) → dst (component root)
+        rounds += 1
+    # star-forest edges: src (child) → dst (component root)
     roots = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
     return (
         vertices.select("id")
@@ -258,28 +274,38 @@ def link_entities(
     n_salt: int = 1,
     use_context: bool = False,
 ) -> DataFrame:
-    """→ (mention, norm, n_docs, component) — the alias-resolution table.
+    """→ (mention, n_docs, norm, component) — the alias-resolution table;
+    ``component`` is the minimum norm of the mention's person.
 
-    ``fuzzy=True`` unions the pairwise-similarity edges (nickname/variant
-    merging, ``fuzzy_mention_edges``) into the exact-norm edge set before
-    connected components; OFF by default so the parity pipeline keeps
-    reference behavior (same opt-in discipline as ``coref_stage``).
-    ``use_context=True`` additionally requires fuzzy pairs to co-occur in
-    at least one document."""
+    ``fuzzy=False`` (the parity pipeline's default, same opt-in discipline
+    as ``coref_stage``): mentions link exactly when their norms are equal,
+    so ``component`` is the norm itself — a lazy frame, no Spark job.
+
+    ``fuzzy=True`` adds the pairwise-similarity edges of
+    ``fuzzy_mention_edges`` (nickname/variant merging) between distinct
+    norms, runs connected components over the norm vertices, and returns
+    the table ``localCheckpoint``ed (``build_nodes``/``build_edges`` read it
+    three times). The similarity predicate depends only on the two norms,
+    so linking norms gives the same components as linking their mentions.
+    ``use_context=True`` additionally requires a fuzzy pair to co-occur in
+    at least one document: for two different norms, "some mention of each
+    shares a doc" — the mention-level guard up to the exact-norm links that
+    already join each norm's mentions."""
     mentions = mention_table(expanded)
-    edges = mention_edges(mentions)
-    if fuzzy:
+    if not fuzzy:
+        return mentions.withColumn("component", F.col("norm"))
+    norms = mentions.select(F.col("norm").alias("mention"), "norm").distinct()
+    context = None
+    if use_context:
         context = (
-            expanded.select("url", F.explode("ckip_entity").alias("mention")).distinct()
-            if use_context
-            else None
+            expanded.select("url", F.explode("ckip_entity").alias("m"))
+            .select("url", normalize_mention(F.col("m")).alias("mention"))
+            .distinct()
         )
-        edges = edges.union(
-            fuzzy_mention_edges(mentions, theta=theta, n_salt=n_salt, context=context)
-        ).distinct()
-    comps = connected_components(
-        mentions.select(F.col("mention").alias("id")), edges
+    edges = fuzzy_mention_edges(norms, theta=theta, n_salt=n_salt, context=context)
+    comps = connected_components(norms.select(F.col("norm").alias("id")), edges)
+    return (
+        mentions.join(comps.withColumnRenamed("id", "norm"), on="norm", how="left")
+        .select("mention", "n_docs", "norm", "component")
+        .localCheckpoint(eager=True)
     )
-    return mentions.join(
-        comps.withColumnRenamed("id", "mention"), on="mention", how="left"
-    ).withColumn("component", F.coalesce("component", "mention"))

@@ -54,7 +54,7 @@ def default_fixture_dir() -> str:
 def _port_nodes_edges_pagerank(
     docs_by_url: dict[str, dict], ref: dict[str, list]
 ) -> tuple[list, list, list]:
-    """Replicas of link_entities (exact-norm CC, fuzzy off — the pipeline
+    """Replicas of link_entities (exact-norm linking, fuzzy off — the pipeline
     default), build_nodes/build_edges (name-keyed projection), and the
     10-iteration weighted PageRank recurrence of operators/graph.py:pagerank
     (dangling-mass redistribution, damping 0.85, tol=0)."""
@@ -68,9 +68,9 @@ def _port_nodes_edges_pagerank(
         for m in source_entities(mod, trad, "ckip", {}):
             mention_urls.setdefault(m, set()).add(url)
 
-    # exact-norm connected components: equal normalized names merge, nothing
-    # else does, so components are exactly the norm groups; component label =
-    # min mention (UTF-8 order == code-point order, matching Spark F.min)
+    # exact-norm linking: equal normalized names merge, nothing else does, so
+    # components are exactly the norm groups; the outputs below use only each
+    # group's min norm (UTF-8 order == code-point order, matching Spark F.min)
     norm = {m: _TITLE_RE.sub("", m) for m in mention_urls}
     groups: dict[str, list[str]] = {}
     for m, nm in norm.items():

@@ -1,6 +1,7 @@
 """Entity-linking internals: blocking, similarity edges, connected components,
 and fuzzy linking end to end against a Python union-find."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from perfbench.inputs import link_oracle, link_tables, norm_mention
@@ -169,8 +170,6 @@ def test_connected_components_long_chain_olog_rounds(spark):
 
 
 def test_connected_components_raises_when_budget_too_small(spark):
-    import pytest
-
     ids = [f"n{i:03d}" for i in range(64)]
     vertices = spark.createDataFrame([(i,) for i in ids], "id string")
     edges = spark.createDataFrame(
@@ -194,14 +193,91 @@ def test_connected_components_two_components_and_dups(spark):
     assert comp["x"] == comp["y"] == comp["z"] == "x"
 
 
-def test_fuzzy_linking_nodes_edges_match_union_find(spark):
+def _union_find(vertices, edges):
+    """id -> minimum id of its connected component, in plain Python."""
+    parent = {v: v for v in vertices}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in vertices}
+
+
+@pytest.mark.parametrize(
+    "edges,is_star",
+    [
+        # two stars rooted at their minima: no round needed
+        ([("b", "a"), ("c", "a"), ("y", "x"), ("z", "x")], True),
+        # duplicate, reversed and self-loop edges that canonicalise to a star
+        ([("a", "b"), ("b", "a"), ("c", "c"), ("a", "c"), ("c", "a")], True),
+        # a src with two out-edges: c→a and c→b
+        ([("c", "a"), ("c", "b"), ("y", "x")], False),
+        # b is both a src (b→a) and a dst (c→b)
+        ([("b", "a"), ("c", "b")], False),
+        # duplicate, reversed and self-loop edges around a non-star
+        ([("b", "a"), ("a", "b"), ("c", "c"), ("c", "a"), ("y", "x"), ("z", "y"), ("z", "y")], False),
+    ],
+    ids=["star-forest", "star-after-canon", "two-out-edges", "src-and-dst", "dups-reversed-loops"],
+)
+def test_connected_components_matches_union_find(spark, edges, is_star):
+    """Labels equal a Python union-find. A graph that is already a star
+    forest (after canonicalisation) needs zero rounds, so ``max_iter=0``
+    succeeds on it; on any other graph ``max_iter=0`` must raise, which
+    shows the star-forest stop test rejects it."""
+    ids = ["a", "b", "c", "d", "x", "y", "z"]
+    vertices = spark.createDataFrame([(i,) for i in ids], "id string")
+    edge_df = spark.createDataFrame(edges, "src string, dst string")
+    want = _union_find(ids, edges)
+    if is_star:
+        comp = connected_components(vertices, edge_df, max_iter=0)
+    else:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(vertices, edge_df, max_iter=0)
+        comp = connected_components(vertices, edge_df)
+    assert {r["id"]: r["component"] for r in comp.collect()} == want
+
+
+def test_exact_link_entities_runs_no_job(spark):
+    """The default (exact) path links mentions by their norm: building the
+    table launches no Spark job, and every component is the mention's norm."""
+    expanded = spark.createDataFrame(
+        [("u1", ["林志玲", "林志玲老師", "志玲"]), ("u2", ["陳大明博士", "林志玲"])],
+        "url string, ckip_entity array<string>",
+    )
+    sc = spark.sparkContext
+    group = "test_exact_link_entities_runs_no_job"
+    sc.setJobGroup(group, "exact link_entities")
+    try:
+        linked = link_entities(expanded)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    rows = {r["mention"]: (r["norm"], r["component"], r["n_docs"]) for r in linked.collect()}
+    assert rows == {
+        "林志玲": ("林志玲", "林志玲", 2),
+        "林志玲老師": ("林志玲", "林志玲", 1),
+        "志玲": ("志玲", "志玲", 1),
+        "陳大明博士": ("陳大明", "陳大明", 1),
+    }
+
+
+@pytest.mark.parametrize("seed,n_salt", [(7, 4), (11, 1)])
+def test_fuzzy_linking_nodes_edges_match_union_find(spark, seed, n_salt):
     """Seeded open-vocabulary mentions (Taiwan surname shares, titled and
-    nickname aliases) → salted fuzzy linking with the context guard →
-    build_nodes/build_edges, equal to the plain-Python union-find."""
-    docs, triples = link_tables(seed=7, n_docs=120, n_people=90)
+    nickname aliases) → fuzzy linking with the context guard, on the salted
+    and the plain block self-join → build_nodes/build_edges, equal to the
+    plain-Python union-find."""
+    docs, triples = link_tables(seed=seed, n_docs=120, n_people=90)
     mentions = spark.createDataFrame(docs, "url string, ckip_entity array<string>")
     triple_df = spark.createDataFrame(triples, "url string, subj string, obj string, rel string")
-    linked = link_entities(mentions, fuzzy=True, use_context=True, n_salt=4)
+    linked = link_entities(mentions, fuzzy=True, use_context=True, n_salt=n_salt)
     nodes = build_nodes(linked).collect()
     edges = build_edges(triple_df, linked, build_nodes(linked)).collect()
 
