@@ -19,20 +19,17 @@ NER sources (reference ``README.md:54-85`` columns 20–31):
 - ``union`` → (gemini+ckip) entity union → union_expansion_ternary /
   union_expansion_merge_label{,_1024} (``README.md:77-84`` cols 29–31)
 
-Spark shape: steps 1–4 for ALL requested sources are ONE struct-returning
-pandas UDF — only ``(text, gemini_trad, gpt_trad)`` cross the Arrow boundary;
-per-doc pair generation stays bounded by the F10 caps (≤105 pairs per
-source, so no quadratic self-join is ever needed). The merge and truncation
-steps (5–6) are JVM array expressions in whole-stage codegen, one merge
-column family per source.
+Spark shape: steps 1–6 for ALL requested sources are ONE per-document step
+(``expand_step``) of the extraction chain, run inside the chain's single
+``mapInArrow`` crossing (``operators/steps.py``). Per-doc pair generation
+stays bounded by the F10 caps (≤105 pairs per source, so no quadratic
+self-join is ever needed). The step drops a doc whose ``consensus_label``
+is empty — the reference's expansion gate.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -46,6 +43,7 @@ from ..functions.chinese import s2t
 from ..functions.parse import parse_five_class_answers
 from ..scorers import get_scorer
 from .parse import TERNARY_DT
+from .steps import Step, run_steps
 
 _PAIR_DT = ArrayType(
     StructType([StructField("p1", StringType()), StructField("p2", StringType())])
@@ -67,7 +65,7 @@ _FIELDS_BY_SOURCE = {
 }
 
 
-def _expand_dt(sources: tuple[str, ...]) -> StructType:
+def _expand_fields(sources: tuple[str, ...]) -> list[StructField]:
     fields = [StructField("trad_text", StringType())]
     for src in sources:
         ent, den, pairs, tern, failed, _merge = _FIELDS_BY_SOURCE[src]
@@ -78,7 +76,7 @@ def _expand_dt(sources: tuple[str, ...]) -> StructType:
             StructField(tern, TERNARY_DT),
             StructField(failed, BooleanType()),
         ]
-    return StructType(fields)
+    return fields
 
 
 def source_entities(mod, trad_text: str, src: str, cache: dict) -> list[str]:
@@ -143,55 +141,44 @@ def _expand_one(mod, text, gemini_trad, gpt_trad, sources) -> dict:
     return out
 
 
-def make_expand_udf(scorer: str = "deterministic", sources: tuple[str, ...] = ("ckip",)):
+def _merge(consensus_label, trad_text, density, ternary) -> tuple[list, list]:
+    """Steps 5–6: merge with consensus preferring consensus per pair +
+    hallucination filter (reference merge_label :159-192), then the
+    1024-truncation-survival variant (:218-234)."""
+    kept = [t for t in consensus_label if t["subj"] in trad_text and t["obj"] in trad_text]
+    covered = {(t["subj"], t["obj"]) for t in kept}
+    extra = [t for t in ternary if (t["subj"], t["obj"]) not in covered]
+    merge = [] if density == "high" else kept + extra
+    head = trad_text[:1024]
+    return merge, [t for t in merge if t["subj"] in head and t["obj"] in head]
+
+
+def expand_step(scorer: str = "deterministic", sources: tuple[str, ...] = ("ckip",)) -> Step:
+    """Adds per requested source: entity list, density, extra_pairs,
+    expansion_ternary, expansion_failed, merge label + _1024 variant
+    (column names per ``_FIELDS_BY_SOURCE``), plus ``trad_text``."""
+    for src in sources:
+        if src not in NER_SOURCES:
+            raise ValueError(f"unknown NER source {src!r}; have {NER_SOURCES}")
     mod = get_scorer(scorer)
-    dt = _expand_dt(sources)
 
-    @pandas_udf(dt)
-    def expand_udf(text: pd.Series, g_trad: pd.Series, p_trad: pd.Series) -> pd.DataFrame:
-        # column-major construction (same values, no per-row dict alignment)
-        field_names = dt.fieldNames()
-        cols: dict[str, list] = {f: [] for f in field_names}
-        for t, g, p in zip(text.tolist(), g_trad.tolist(), p_trad.tolist()):
-            row = _expand_one(mod, t, g, p, sources)
-            for f in field_names:
-                cols[f].append(row[f])
-        return pd.DataFrame(cols)
+    fields = _expand_fields(sources)
 
-    return expand_udf, dt
+    def expand(text, g_trad, p_trad, consensus_label):
+        if not consensus_label:
+            return None
+        row = _expand_one(mod, text, g_trad, p_trad, sources)
+        out = [row[f.name] for f in fields]
+        for src in sources:
+            _ent, den, _pairs, tern, _failed, _merge_col = _FIELDS_BY_SOURCE[src]
+            out += _merge(consensus_label, row["trad_text"], row[den], row[tern])
+        return out
 
-
-def _with_merge_columns(df: DataFrame, density_col: str, ternary_col: str, out_col: str) -> DataFrame:
-    """Steps 5–6 (JVM array expressions): merge with consensus preferring
-    consensus per pair + hallucination filter (reference merge_label
-    :159-192), then the 1024-truncation-survival variant (:218-234)."""
-    doc = F.col("trad_text")
-    kept_consensus = F.filter(
-        F.col("consensus_label"),
-        lambda t: doc.contains(t["subj"]) & doc.contains(t["obj"]),
-    )
-    covered = F.transform(
-        kept_consensus, lambda t: F.struct(t["subj"].alias("p1"), t["obj"].alias("p2"))
-    )
-    extra_kept = F.filter(
-        F.col(ternary_col),
-        lambda t: ~F.array_contains(
-            covered, F.struct(t["subj"].alias("p1"), t["obj"].alias("p2"))
-        ),
-    )
-    empty_ternary = F.slice(F.col("consensus_label"), 1, 0)  # typed empty array
-    merge = F.when(F.col(density_col) == "high", empty_ternary).otherwise(
-        F.concat(kept_consensus, extra_kept)
-    )
-    df = df.withColumn(out_col, merge)
-    head = F.substring(F.col("trad_text"), 1, 1024)
-    return df.withColumn(
-        f"{out_col}_1024",
-        F.filter(
-            F.col(out_col),
-            lambda t: head.contains(t["subj"]) & head.contains(t["obj"]),
-        ),
-    )
+    merges = [_FIELDS_BY_SOURCE[src][5] for src in sources]
+    merge_cols = [c for m in merges for c in (m, f"{m}_1024")]
+    emits = (*fields, *(StructField(c, TERNARY_DT) for c in merge_cols))
+    reads = ("text", "gemini_ternary_trad", "gpt_ternary_trad", "consensus_label")
+    return Step("expand", reads, emits, expand)
 
 
 def expansion_stage(
@@ -199,24 +186,6 @@ def expansion_stage(
     scorer: str = "deterministic",
     ner_sources: tuple[str, ...] = ("ckip",),
 ) -> DataFrame:
-    """Input: consensus stage output (must already be filtered to
-    ``size(consensus_label) > 0`` — reference ``ckip_expansion.py:238-239``).
-    Adds per requested source: entity list, density, extra_pairs,
-    expansion_ternary, expansion_failed, merge label + _1024 variant
-    (column names per ``_FIELDS_BY_SOURCE``), plus ``trad_text``."""
-    for src in ner_sources:
-        if src not in NER_SOURCES:
-            raise ValueError(f"unknown NER source {src!r}; have {NER_SOURCES}")
-    udf, dt = make_expand_udf(scorer, tuple(ner_sources))
-    df = consensus_df.withColumn(
-        "_exp",
-        udf(F.col("text"), F.col("gemini_ternary_trad"), F.col("gpt_ternary_trad")),
-    )
-    for field in dt.fieldNames():
-        df = df.withColumn(field, F.col(f"_exp.{field}"))
-    df = df.drop("_exp")
-
-    for src in ner_sources:
-        _ent, den, _pairs, tern, _failed, merge = _FIELDS_BY_SOURCE[src]
-        df = _with_merge_columns(df, den, tern, merge)
-    return df
+    """Input: consensus stage output; docs with an empty ``consensus_label``
+    are dropped (reference ``ckip_expansion.py:238-239``)."""
+    return run_steps(consensus_df, [expand_step(scorer, tuple(ner_sources))])

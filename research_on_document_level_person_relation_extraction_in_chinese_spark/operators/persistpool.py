@@ -4,10 +4,10 @@ Several operators consume an expensive scan (md5-heavy shingle/feature
 construction, Bloom map passes, banded-LSH projections) from MULTIPLE
 consumers in one query plan. Spark reuses exchanges, not scans, so without a
 persist the scan recomputes once per consumer (guide §5 "Caching": reuse +
-recompute-cost is exactly the case where persist pays). The pool is bounded
-the same way plans/pipeline.py's _MANAGED_PERSISTS is: each operator call
-evicts the blocks of the previous call before persisting its own, so a
-long-lived driver looping queries never accumulates storage blocks.
+recompute-cost is exactly the case where persist pays). The pool is
+bounded: each operator call evicts the blocks of the previous call before
+persisting its own, so a long-lived driver looping queries never
+accumulates storage blocks.
 
 ``persist_scan``  — evict every pooled frame, persist ``df``, track it (the
                     one-slot contract ``operators/dedup.py`` shipped in r2).

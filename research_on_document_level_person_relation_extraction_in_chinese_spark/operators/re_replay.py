@@ -12,7 +12,8 @@ Reference flow (``README.md:17-19``):
   post-processing.
 
 Spark shape: pair generation + per-pair scoring + reassembly are ONE
-struct-returning pandas UDF (one Arrow crossing; per-doc fan-out is bounded
+per-document step run by ``run_steps`` (one ``mapInArrow`` crossing, which
+no downstream filter can clone; per-doc fan-out is bounded
 by the same C(n,2) combinatorics the reference has — NER entity lists are
 small by the F10 density guard upstream). The re-parse stays in the shared
 kernel (``functions/parse.py``) so predictions round-trip through exactly
@@ -32,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, StringType, StructField
 
 from ..functions.analysis import generate_pairs
 from ..functions.parse import (
@@ -42,16 +43,8 @@ from ..functions.parse import (
 )
 from ..scorers import get_scorer
 from ..scorers.rules import strip_title
-from .parse import PARSED_DT, _parse_cell
-
-_REPLAY_DT = StructType(
-    [
-        StructField("has_relation", StringType()),
-        StructField("output", StringType()),
-        StructField("n_pairs_scored", IntegerType()),
-        StructField("n_pairs_skipped", IntegerType()),
-    ]
-)
+from .parse import TERNARY_DT, _parse_cell
+from .steps import Step, run_steps
 
 RETRY_BUDGET = 2  # reference re_inference.py:50 retry_count
 
@@ -96,18 +89,6 @@ def replay_one_doc(mod, trad_text: str, entities: list[str], max_length: int) ->
     }
 
 
-def make_re_replay_udf(scorer: str = "deterministic", max_length: int = 1024):
-    mod = get_scorer(scorer)
-
-    @pandas_udf(_REPLAY_DT)
-    def replay_udf(trad_text: pd.Series, entities: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            [replay_one_doc(mod, t, e, max_length) for t, e in zip(trad_text, entities)]
-        )
-
-    return replay_udf
-
-
 def re_replay_stage(
     expanded: DataFrame,
     scorer: str = "deterministic",
@@ -118,17 +99,23 @@ def re_replay_stage(
     gate, ``re_inference.py:117``) → + ``{model}_has_relation``,
     ``{model}_output``, ``{model}_pairs_scored``, ``{model}_pairs_skipped``.
     """
-    udf = make_re_replay_udf(scorer, max_length)
-    df = expanded.filter(F.size("merge_label_1024") > 0).withColumn(
-        "_rp", udf(F.col("trad_text"), F.col("ckip_entity"))
+    mod = get_scorer(scorer)
+
+    def replay(trad_text, entities):
+        r = replay_one_doc(mod, trad_text, entities, max_length)
+        return r["has_relation"], r["output"], r["n_pairs_scored"], r["n_pairs_skipped"]
+
+    emits = tuple(
+        StructField(f"{model_name}_{part}", typ)
+        for part, typ in (
+            ("has_relation", StringType()),
+            ("output", StringType()),
+            ("pairs_scored", IntegerType()),
+            ("pairs_skipped", IntegerType()),
+        )
     )
-    return (
-        df.withColumn(f"{model_name}_has_relation", F.col("_rp.has_relation"))
-        .withColumn(f"{model_name}_output", F.col("_rp.output"))
-        .withColumn(f"{model_name}_pairs_scored", F.col("_rp.n_pairs_scored"))
-        .withColumn(f"{model_name}_pairs_skipped", F.col("_rp.n_pairs_skipped"))
-        .drop("_rp")
-    )
+    step = Step("replay", ("trad_text", "ckip_entity"), emits, replay)
+    return run_steps(expanded.filter(F.size("merge_label_1024") > 0), [step])
 
 
 def re_pair_predictions(
@@ -160,16 +147,6 @@ def re_pair_predictions(
     return pairs.withColumn("pred_label", pred_udf(F.col("text"), F.col("subj"), F.col("obj")))
 
 
-def make_generation_udf(scorer: str = "deterministic", max_length: int = 1024):
-    mod = get_scorer(scorer)
-
-    @pandas_udf(StringType())
-    def generate_udf(text: pd.Series) -> pd.Series:
-        return pd.Series([mod.score_generate((t or "")[:max_length]) for t in text])
-
-    return generate_udf
-
-
 def generation_replay_stage(
     expanded: DataFrame,
     scorer: str = "deterministic",
@@ -179,31 +156,32 @@ def generation_replay_stage(
     """Doc-level generation replay (M11): one answer text per document over
     the raw text head (reference ``inference.py:90-109`` scores
     ``raw_content[:1024]``; the model emits Traditional triples)."""
-    udf = make_generation_udf(scorer, max_length)
-    df = expanded.filter(F.size("merge_label_1024") > 0).withColumn(
-        f"{model_name}_output", udf(F.col("text"))
+    mod = get_scorer(scorer)
+
+    def generate(text):
+        output = mod.score_generate((text or "")[:max_length])
+        return output, HAS_RELATION if output.startswith(HAS_RELATION) else output[:1]
+
+    emits = (
+        StructField(f"{model_name}_output", StringType()),
+        StructField(f"{model_name}_has_relation", StringType()),
     )
-    return df.withColumn(
-        f"{model_name}_has_relation",
-        F.when(F.col(f"{model_name}_output").startswith(HAS_RELATION), HAS_RELATION)
-        .otherwise(F.substring(F.col(f"{model_name}_output"), 1, 1)),
-    )
+    step = Step("generate", ("text",), emits, generate)
+    return run_steps(expanded.filter(F.size("merge_label_1024") > 0), [step])
 
 
 def replay_triples(replayed: DataFrame, model_name: str = "mt5") -> DataFrame:
     """Re-parse the reassembled answers through the tolerant F1 kernel
     (reference ``postprecess.py:338-339``) → (url, subj, obj, rel)."""
 
-    @pandas_udf(PARSED_DT)
-    def parse_udf(output: pd.Series, has: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame([_parse_cell(o, h, True) for o, h in zip(output, has)])
+    def parse(output, has):
+        return (_parse_cell(output, has, True)["ternary"],)
 
-    parsed = replayed.withColumn(
-        "_parsed",
-        parse_udf(F.col(f"{model_name}_output"), F.col(f"{model_name}_has_relation")),
-    )
+    out, has = f"{model_name}_output", f"{model_name}_has_relation"
+    step = Step("reparse", (out, has), (StructField("_ternary", TERNARY_DT),), parse)
     return (
-        parsed.select("url", F.explode("_parsed.ternary").alias("t"))
+        run_steps(replayed.select("url", out, has), [step])
+        .select("url", F.explode("_ternary").alias("t"))
         .select("url", "t.subj", "t.obj", "t.rel")
         .distinct()
     )

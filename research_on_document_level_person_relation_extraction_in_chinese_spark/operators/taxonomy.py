@@ -5,11 +5,16 @@ The reference collects the global distinct set of free-text relation words
 as JSON, and rewrites every triple's relation through it
 (``CommonCrawl/data/train/postprecess.py:270-347,91-128``).
 
-Scale shape: the distinct-relation set is tiny by construction (it is the
-model's label vocabulary), so we (a) aggregate it with a distinct over the
-exploded relation columns — the pipeline's only global barrier — and
-(b) rewrite triples **map-side** with a map-literal ``transform`` expression:
-no explode/groupBy round-trip, no shuffle, stays inside whole-stage codegen.
+Scale shape: ``score_taxonomy`` is a pure map over single words, so no
+global barrier is needed. ``remap_step`` is a per-document step of the
+extraction chain (``operators/steps.py``): each worker keeps a memo of the
+words it has classified, calls the scorer once per Arrow batch for the
+words it has not seen yet, and rewrites each triple's relation through the
+memo, with the same order-preserving re-dedup as before.
+
+``build_taxonomy``/``remap_relations`` are the old barrier form (a global
+distinct + collect, then a map-literal ``transform``). The pipeline no
+longer runs them; the benchmark's traced layer sweep still stages them.
 """
 
 from __future__ import annotations
@@ -18,8 +23,15 @@ from itertools import chain
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField
 
 from ..scorers import get_scorer
+from .parse import TERNARY_DT
+from .steps import Step
+
+#: worker-local {scorer: {raw word: class}}; lives as long as the Python
+#: worker, so a reused worker classifies each word once
+_MEMO: dict[str, dict[str, str]] = {}
 
 
 def build_taxonomy(parsed: DataFrame, annotators=("gemini", "gpt"), scorer: str = "deterministic") -> dict[str, str]:
@@ -58,3 +70,32 @@ def remap_relations(parsed: DataFrame, taxonomy: dict[str, str], cols=("gemini_t
         )
         df = df.withColumn(col, remapped)
     return df
+
+
+def remap_step(
+    scorer: str = "deterministic", cols: tuple[str, ...] = ("gemini_ternary", "gpt_ternary")
+) -> Step:
+    """Rewrite each ternary array's ``rel`` through the taxonomy and
+    re-dedup (two raw words in one class may collapse), per document — the
+    values ``remap_relations(parsed, build_taxonomy(parsed))`` gives."""
+    mod = get_scorer(scorer)
+
+    def classify_new(*columns):
+        memo = _MEMO.setdefault(scorer, {})
+        new = {t["rel"] for col in columns for terns in col for t in terns or ()} - memo.keys()
+        if new:
+            memo.update(mod.score_taxonomy(sorted(new)))
+
+    def remap(*terns):
+        memo = _MEMO[scorer]
+        out = []
+        for col in terns:
+            if col is None:
+                out.append(None)
+                continue
+            kept = dict.fromkeys((t["subj"], t["obj"], memo.get(t["rel"], "其他")) for t in col)
+            out.append([{"subj": s, "obj": o, "rel": r} for s, o, r in kept])
+        return out
+
+    emits = tuple(StructField(c, TERNARY_DT) for c in cols)
+    return Step("remap", tuple(cols), emits, remap, prepare=classify_new)

@@ -1,18 +1,20 @@
 """End-to-end KG-construction pipeline (SURVEY §3 entry-point B shape).
 
 docs(url, warc_ts, html, text, lang)
-  → zh filter → annotate (2 scorers, one pass) → parse → taxonomy barrier →
-    remap → consensus (+verify) → expansion (NER + pair classify) → merge →
+  → zh filter → annotate (2 scorers, one pass) → parse → taxonomy remap →
+    consensus (+verify) → expansion (NER + pair classify) → merge →
     triples → entity linking → graph nodes/edges.
 
-Everything up to entity linking is narrow (zero shuffles — one scan, chained
-mapInPandas/UDF projections); the only wide operations in the whole plan are
-the tiny taxonomy distinct, the linking self-join, and the final graph
+Everything up to entity linking is narrow (zero shuffles — one scan and ONE
+``mapInArrow`` crossing per zh document that runs the whole per-document
+step chain, ``operators/steps.py``); the only wide operations in the whole
+plan are the triples distinct, the linking self-join, and the final graph
 groupBys. That is what makes the plan scale linearly with corpus size.
 
 With a ``StageCatalog`` the annotated/consensus/expanded stage tables are
 checkpointed with lineage manifests + counters and a re-run resumes from the
 last complete stage (the reference's per-stage CSV rewrite, done right).
+Each stage is then one job with one crossing over the previous stage table.
 """
 
 from __future__ import annotations
@@ -20,95 +22,53 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.expansion import expansion_stage
-from ..operators.fused import annotate_parse_stage, fused_consensus_stage
+from ..operators.expansion import expand_step, expansion_stage
+from ..operators.fused import annotate_parse_stage, annotate_step, consensus_step
 from ..operators.graph import build_edges, build_nodes
 from ..operators.linking import link_entities
-from ..operators.taxonomy import build_taxonomy, remap_relations
+from ..operators.steps import run_steps
+from ..operators.taxonomy import remap_step
 from ..sources.catalog import StageCatalog
 
-
-#: bounded managed-persist pool: at most ONE expansion frame's annotate scan
-#: is cached at a time — each expanded_frame(cache=True) call evicts the
-#: previous call's block before persisting its own (round-2 verdict: a
-#: long-lived driver looping extract_triples(cache=True) used to accumulate
-#: storage blocks without bound).
-_MANAGED_PERSISTS: list[DataFrame] = []
-
-
-def _persist_managed(df: DataFrame) -> DataFrame:
-    """Persist ``df`` after unpersisting any frame a previous
-    ``expanded_frame(cache=True)`` call left cached. Callers that need two
-    expansion frames alive simultaneously must pass ``cache=False`` and
-    manage persistence themselves (the documented contract)."""
-    while _MANAGED_PERSISTS:
-        stale = _MANAGED_PERSISTS.pop()
-        try:
-            stale.unpersist()
-        except Exception:
-            pass  # session of the stale frame may already be stopped
-    p = df.persist()
-    _MANAGED_PERSISTS.append(p)
-    return p
+# unused here: perfbench/tracing.py patches these as attributes of this module
+from ..operators.fused import fused_consensus_stage  # noqa: F401
+from ..operators.taxonomy import build_taxonomy, remap_relations  # noqa: F401
 
 
 def expanded_frame(
     docs: DataFrame,
     scorer: str = "deterministic",
-    cache: bool = True,
     ner_sources: tuple[str, ...] = ("ckip",),
     annotators: tuple[str, ...] = ("gemini", "gpt"),
     strict_verify_failure: bool = False,
 ) -> DataFrame:
     """zh docs → fully expanded document frame (annotate → parse → taxonomy →
-    consensus → expansion → merge labels), uncheckpointed. ``ner_sources``
-    selects the expansion NER variants (ckip / gemini / union golden column
-    families — reference README.md cols 20–31). ``annotators`` selects the
-    detection models (k-annotator consensus; must include gemini + gpt —
-    the expansion stage's already-labeled anti-join reads their trad
-    columns, reference ``ckip_expansion.py:71-76``). ``strict_verify_failure``
-    switches consensus to the test-corpus whole-doc-zeroing semantics."""
+    consensus → expansion → merge labels), uncheckpointed, in one Python
+    crossing per doc. ``ner_sources`` selects the expansion NER variants
+    (ckip / gemini / union golden column families — reference README.md
+    cols 20–31). ``annotators`` selects the detection models (k-annotator
+    consensus; must include gemini + gpt — the expansion step's
+    already-labeled anti-join reads their trad columns, reference
+    ``ckip_expansion.py:71-76``). ``strict_verify_failure`` switches
+    consensus to the test-corpus whole-doc-zeroing semantics."""
     if not {"gemini", "gpt"} <= set(annotators):
         raise ValueError("annotators must include 'gemini' and 'gpt'")
     zh = docs.filter(F.col("lang") == "zh").select("url", "text")
-    parsed = annotate_parse_stage(zh, scorer=scorer, annotators=annotators)
-    if cache:
-        # parsed is consumed twice (taxonomy barrier + main chain); persisting
-        # avoids re-running the scorer scan per job. The checkpointed
-        # (StageCatalog) path is the 100-TB equivalent — a stage table on
-        # disk instead of executor memory. Managed: the previous call's
-        # cached frame is evicted (bounded storage across repeated calls).
-        parsed = _persist_managed(parsed)
-    taxonomy = build_taxonomy(parsed, annotators=annotators, scorer=scorer)  # global barrier (tiny)
-    remapped = remap_relations(
-        parsed, taxonomy, cols=tuple(f"{ann}_ternary" for ann in annotators)
+    return run_steps(
+        zh,
+        [
+            annotate_step(scorer, annotators=annotators),
+            remap_step(scorer, cols=tuple(f"{ann}_ternary" for ann in annotators)),
+            consensus_step(scorer, annotators, strict_verify_failure),
+            expand_step(scorer, tuple(ner_sources)),
+        ],
     )
-    # r6: docs where EVERY annotator's ternary is empty/null provably yield
-    # an empty consensus_label (checked = correct+passed ⊆ mine = [] for all
-    # annotators, in both verify-failure modes), and the chain filters those
-    # out right after the consensus node — so drop them BEFORE the Arrow
-    # crossing: the consensus UDF's input (and its text payload) shrinks to
-    # the ~45% relation-bearing docs, value-identically (guide §4: pass the
-    # Python boundary only the rows the function can affect).
-    any_nonempty = None
-    for ann in annotators:
-        c = F.size(F.col(f"{ann}_ternary")) > 0
-        any_nonempty = c if any_nonempty is None else (any_nonempty | c)
-    cons = fused_consensus_stage(
-        remapped.where(any_nonempty),
-        scorer=scorer,
-        annotators=annotators,
-        strict_verify_failure=strict_verify_failure,
-    )
-    cons_docs = cons.filter(F.size("consensus_label") > 0)
-    return expansion_stage(cons_docs, scorer=scorer, ner_sources=ner_sources)
 
 
 def triples_from_expanded(expanded: DataFrame) -> DataFrame:
     """merge_label arrays → exploded (url, subj, obj, rel) triple table."""
     return (
-        expanded.filter(F.size("merge_label") > 0)
-        .select("url", F.explode("merge_label").alias("t"))
+        expanded.select("url", F.explode("merge_label").alias("t"))
         .select("url", "t.subj", "t.obj", "t.rel")
         .distinct()
     )
@@ -122,13 +82,12 @@ def extract_triples(
     strict_verify_failure: bool = False,
 ) -> DataFrame:
     """Flagship query: all person-relation triples in the corpus.
-    ``cache=False`` for callers that loop (streaming foreachBatch) — avoids
-    accumulating persisted blocks across invocations."""
+    ``cache`` has no effect (nothing is persisted); it stays accepted for
+    callers that still pass it."""
     return triples_from_expanded(
         expanded_frame(
             docs,
             scorer,
-            cache=cache,
             annotators=annotators,
             strict_verify_failure=strict_verify_failure,
         )
@@ -184,15 +143,19 @@ def run_pipeline(
         for r in rows:
             out["n_docs"] += r["count"]
             out[f"gemini={r['gemini_has_relation']},gpt={r['gpt_has_relation']}"] = r["count"]
-        # M1 retry loop: docs whose answer needed re-instruction retries
-        retry = df.agg(
+        # M1 retry loop: docs whose answer needed re-instruction retries;
+        # the taxonomy's vocabulary (distinct raw relation words) rides along
+        relations = F.array_distinct(F.concat("gemini_relations", "gpt_relations"))
+        agg = df.agg(
             *[
                 F.sum((F.col(f"{ann}_attempts") > 1).cast("int")).alias(ann)
                 for ann in ("gemini", "gpt")
-            ]
+            ],
+            F.size(F.array_distinct(F.flatten(F.collect_set(relations)))).alias("n_rel"),
         ).collect()[0]
         for ann in ("gemini", "gpt"):
-            out[f"{ann}_retried_docs"] = int(retry[ann] or 0)
+            out[f"{ann}_retried_docs"] = int(agg[ann] or 0)
+        metrics["taxonomy"] = {"n_distinct_relations": int(agg["n_rel"])}
         return out
 
     parsed = checkpoint(
@@ -201,9 +164,6 @@ def run_pipeline(
         ["web_pages"],
         detect_metrics,
     )
-    taxonomy = build_taxonomy(parsed, scorer=scorer)
-    metrics["taxonomy"] = {"n_distinct_relations": len(taxonomy)}
-    remapped = remap_relations(parsed, taxonomy)
 
     def consensus_metrics(df: DataFrame) -> dict:
         row = df.agg(
@@ -218,11 +178,10 @@ def run_pipeline(
 
     cons = checkpoint(
         "consensus",
-        lambda: fused_consensus_stage(remapped, scorer=scorer),
+        lambda: run_steps(parsed, [remap_step(scorer), consensus_step(scorer)]),
         ["annotated"],
         consensus_metrics,
     )
-    cons_docs = cons.filter(F.size("consensus_label") > 0)
 
     def expansion_metrics(df: DataFrame) -> dict:
         rows = df.groupBy("density").count().collect()
@@ -235,11 +194,17 @@ def run_pipeline(
         out.update({k: int(v or 0) for k, v in agg.asDict().items()})
         return out
 
-    expanded = checkpoint(
-        "expanded",
-        lambda: expansion_stage(cons_docs, scorer=scorer),
-        ["consensus"],
-        expansion_metrics,
+    # without a catalog the stage frames above stay unexecuted views and
+    # the expanded frame is the fused chain: one crossing per doc
+    expanded = (
+        expanded_frame(docs, scorer=scorer)
+        if catalog is None
+        else checkpoint(
+            "expanded",
+            lambda: expansion_stage(cons, scorer=scorer),
+            ["consensus"],
+            expansion_metrics,
+        )
     )
 
     triples = triples_from_expanded(expanded)

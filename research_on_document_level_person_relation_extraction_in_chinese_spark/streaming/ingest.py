@@ -4,9 +4,10 @@ The reference is pure batch (SURVEY §2.8) — its "streaming" is rerun-from-CSV
 At crawl scale, new WARC/CCNet shards arrive continuously, so we provide a
 file-source streaming ingest: ``readStream`` over the web_pages parquet
 directory → ``foreachBatch`` running the SAME batch extraction plan per
-micro-batch (the taxonomy barrier is per-batch, like the reference's
-memoized per-run map) → append to the triples sink with exactly-once
-semantics via the checkpoint location. ``availableNow`` drains the backlog
+micro-batch (one Python crossing per document; each Python worker keeps
+its taxonomy memo across batches, like the reference's memoized map) →
+append to the triples sink with exactly-once semantics via the checkpoint
+location. ``availableNow`` drains the backlog
 and stops — which doubles as the test mode.
 """
 
@@ -42,10 +43,7 @@ def stream_extract_triples(
     )
 
     def process(batch_df, batch_id: int):
-        # cache=False: a per-micro-batch persist would accumulate storage
-        # blocks across the stream's lifetime (the taxonomy barrier recomputes
-        # the scorer scan once instead — bounded work per small batch)
-        triples = extract_triples(batch_df, scorer=scorer, cache=False)
+        triples = extract_triples(batch_df, scorer=scorer)
         triples.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
 
     writer = stream.writeStream.foreachBatch(process).option(

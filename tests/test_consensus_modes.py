@@ -80,7 +80,7 @@ def test_strict_mode_parity_and_divergence(spark):
     dropped_urls = {u for (u, *_rest) in train_set - strict_set}
     assert len(dropped_urls) >= 1
 
-    exp = expanded_frame(docs, cache=False, strict_verify_failure=True)
+    exp = expanded_frame(docs, strict_verify_failure=True)
     spark_cons = {
         (r["url"], r["subj"], r["obj"], r["rel"])
         for r in exp.select("url", F.explode("consensus_label").alias("t"))
@@ -90,7 +90,7 @@ def test_strict_mode_parity_and_divergence(spark):
     assert spark_cons == strict_set  # exact parity in strict mode
 
     # and the train-mode Spark run matches the train-mode port
-    exp_train = expanded_frame(docs, cache=False, strict_verify_failure=False)
+    exp_train = expanded_frame(docs, strict_verify_failure=False)
     spark_train = {
         (r["url"], r["subj"], r["obj"], r["rel"])
         for r in exp_train.select("url", F.explode("consensus_label").alias("t"))

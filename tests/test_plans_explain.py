@@ -4,6 +4,7 @@ pushdown, whole-stage codegen on the relational hot paths."""
 
 import io
 import os
+import re
 from contextlib import redirect_stdout
 
 import __spark_entry__ as entry_mod
@@ -178,6 +179,82 @@ def test_pipeline_plan_is_narrow_until_distinct(spark):
     expanded = expansion_stage(cons.filter(F.size("consensus_label") > 0))
     plan = _plan(expanded.select("url", "merge_label"))
     assert "Exchange" not in plan, plan
+
+
+_PYTHON_NODE = re.compile(r"\b(ArrowEvalPython|BatchEvalPython|MapInArrow|MapInPandas)\b")
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _python_calls(plan: str) -> list[str]:
+    """Python functions called by a physical plan's Python nodes, one entry
+    per call site (a UDF that Catalyst cloned shows up twice)."""
+    calls = []
+    for line in plan.splitlines():
+        m = _PYTHON_NODE.search(line)
+        if not m:
+            continue
+        depth = 0
+        for tok in re.finditer(r"\w+\(|[()\]]", line[m.end():]):
+            t = tok.group()
+            if t.endswith("(") and t != "(":
+                if depth == 0:
+                    calls.append(t[:-1])
+                depth += 1
+            elif t == "(":
+                depth += 1
+            elif t == ")":
+                depth -= 1
+            elif depth == 0:
+                break  # the "]" closing an ArrowEvalPython UDF list
+    return calls
+
+
+def test_extraction_python_functions_run_once(spark, tmp_path, monkeypatch):
+    """Each Python function of the extraction chain appears once in the
+    physical plan: a filter over a Python result must not clone it into a
+    pushed-down predicate. ``extract_triples`` is one Python node."""
+    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.re_replay import (
+        re_replay_stage,
+        replay_triples,
+    )
+    from research_on_document_level_person_relation_extraction_in_chinese_spark.plans.pipeline import (
+        expanded_frame,
+        extract_triples,
+    )
+    from research_on_document_level_person_relation_extraction_in_chinese_spark.sources.corpus import (
+        generate_corpus,
+    )
+    from research_on_document_level_person_relation_extraction_in_chinese_spark.streaming import (
+        ingest,
+    )
+
+    in_dir = str(tmp_path / "in")
+    generate_corpus(spark, 40, seed=3).repartition(2).write.parquet(in_dir)
+    docs = spark.read.parquet(in_dir)
+
+    plan = _physical(extract_triples(docs))
+    assert len(_python_calls(plan)) == 1, plan
+    assert "ArrowEvalPython" not in plan
+
+    replay = _python_calls(_physical(replay_triples(re_replay_stage(expanded_frame(docs)))))
+    assert len(replay) == len(set(replay)), replay
+
+    stream_calls = []
+
+    def spy(*args, **kwargs):
+        df = real(*args, **kwargs)
+        stream_calls.append(_python_calls(_physical(df)))
+        return df
+
+    real = ingest.extract_triples
+    monkeypatch.setattr(ingest, "extract_triples", spy)
+    ingest.stream_extract_triples(spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert stream_calls
+    for calls in stream_calls:
+        assert len(calls) == len(set(calls)), calls
 
 
 def test_ivf_plan_shape(spark):
