@@ -41,7 +41,7 @@ from pyspark.sql.types import (
 from ..functions.analysis import expansion_pairs
 from ..functions.chinese import s2t
 from ..functions.parse import parse_five_class_answers
-from ..scorers import get_scorer
+from ..scorers import deterministic
 from .parse import TERNARY_DT
 from .steps import Step, run_steps
 
@@ -153,21 +153,20 @@ def _merge(consensus_label, trad_text, density, ternary) -> tuple[list, list]:
     return merge, [t for t in merge if t["subj"] in head and t["obj"] in head]
 
 
-def expand_step(scorer: str = "deterministic", sources: tuple[str, ...] = ("ckip",)) -> Step:
+def expand_step(sources: tuple[str, ...] = ("ckip",)) -> Step:
     """Adds per requested source: entity list, density, extra_pairs,
     expansion_ternary, expansion_failed, merge label + _1024 variant
     (column names per ``_FIELDS_BY_SOURCE``), plus ``trad_text``."""
     for src in sources:
         if src not in NER_SOURCES:
             raise ValueError(f"unknown NER source {src!r}; have {NER_SOURCES}")
-    mod = get_scorer(scorer)
 
     fields = _expand_fields(sources)
 
     def expand(text, g_trad, p_trad, consensus_label):
         if not consensus_label:
             return None
-        row = _expand_one(mod, text, g_trad, p_trad, sources)
+        row = _expand_one(deterministic, text, g_trad, p_trad, sources)
         out = [row[f.name] for f in fields]
         for src in sources:
             _ent, den, _pairs, tern, _failed, _merge_col = _FIELDS_BY_SOURCE[src]
@@ -183,9 +182,8 @@ def expand_step(scorer: str = "deterministic", sources: tuple[str, ...] = ("ckip
 
 def expansion_stage(
     consensus_df: DataFrame,
-    scorer: str = "deterministic",
     ner_sources: tuple[str, ...] = ("ckip",),
 ) -> DataFrame:
     """Input: consensus stage output; docs with an empty ``consensus_label``
     are dropped (reference ``ckip_expansion.py:238-239``)."""
-    return run_steps(consensus_df, [expand_step(scorer, tuple(ner_sources))])
+    return run_steps(consensus_df, [expand_step(tuple(ner_sources))])

@@ -28,7 +28,7 @@ from pyspark.sql.types import ArrayType, BooleanType, IntegerType, StringType, S
 
 from ..functions.chinese import s2t
 from ..functions.parse import parse_verdicts
-from ..scorers import get_scorer
+from ..scorers import deterministic
 from .parse import PARSED_DT, TERNARY_DT, _parse_cell
 from .steps import Step, run_steps
 
@@ -41,26 +41,17 @@ _ANNOTATE_PARTS = (
 
 
 def annotate_step(
-    scorer: str = "deterministic",
     tolerant: bool = True,
     annotators: tuple[str, ...] = ("gemini", "gpt"),
 ) -> Step:
     """All requested annotators scored AND parsed per doc (2 by default;
-    M3 ``taide`` / M4 ``fewshot`` variants compose a 3+-annotator shape)."""
-    mod = get_scorer(scorer)
-
-    # the retry/re-instruction loop (M1) surfaces its attempt counter when
-    # the scorer provides it; plain (status, output) scorers report 1
-    with_attempts = getattr(mod, "score_detect_with_attempts", None)
+    M3 ``taide`` / M4 ``fewshot`` variants compose a 3+-annotator shape).
+    ``attempts`` counts the retry/re-instruction loop (M1)."""
 
     def annotate(text):
         out = []
         for ann in annotators:
-            if with_attempts is not None:
-                status, output, attempts = with_attempts(text, ann)
-            else:
-                status, output = mod.score_detect(text, ann)
-                attempts = 1
+            status, output, attempts = deterministic.score_detect_with_attempts(text, ann)
             parsed = _parse_cell(output, status, tolerant)
             out += [status, output, attempts, *(parsed[f.name] for f in PARSED_DT.fields)]
         return out
@@ -73,11 +64,10 @@ def annotate_step(
 
 def annotate_parse_stage(
     docs: DataFrame,
-    scorer: str = "deterministic",
     tolerant: bool = True,
     annotators: tuple[str, ...] = ("gemini", "gpt"),
 ) -> DataFrame:
-    return run_steps(docs, [annotate_step(scorer, tolerant, annotators)])
+    return run_steps(docs, [annotate_step(tolerant, annotators)])
 
 
 def _trad(triples) -> list[tuple[str, str, str]]:
@@ -96,7 +86,6 @@ def _as_dicts(triples) -> list[dict]:
 
 
 def consensus_step(
-    scorer: str = "deterministic",
     annotators: tuple[str, ...] = ("gemini", "gpt"),
     strict_verify_failure: bool = False,
 ) -> Step:
@@ -109,7 +98,6 @@ def consensus_step(
     checked triples minus self-pairs → ``consensus_label``, and its distinct
     people → ``consensus_entities``. A doc whose ternaries are all empty
     calls no scorer."""
-    mod = get_scorer(scorer)
 
     def consensus(text, *terns):
         trad = [_trad(t) for t in terns]
@@ -123,7 +111,7 @@ def consensus_step(
             wrong = [x for x in mine if x not in theirs]
             passed, failed, err = [], [], False
             if wrong:
-                answer = mod.score_verify(text, wrong)
+                answer = deterministic.score_verify(text, wrong)
                 verdicts = parse_verdicts(answer, len(wrong))
                 if verdicts is None:  # 驗證過程有誤
                     failed, err = wrong, True
@@ -160,7 +148,6 @@ def consensus_step(
 
 def fused_consensus_stage(
     parsed: DataFrame,
-    scorer: str = "deterministic",
     annotators: tuple[str, ...] = ("gemini", "gpt"),
     strict_verify_failure: bool = False,
 ) -> DataFrame:
@@ -172,4 +159,4 @@ def fused_consensus_stage(
     semantics: 驗證過程有誤 on ANY annotator zeroes the WHOLE document's
     consensus label (reference ``test/postprecess_other.py:24-31`` — SURVEY
     §3.2 calls out the divergence)."""
-    return run_steps(parsed, [consensus_step(scorer, annotators, strict_verify_failure)])
+    return run_steps(parsed, [consensus_step(annotators, strict_verify_failure)])

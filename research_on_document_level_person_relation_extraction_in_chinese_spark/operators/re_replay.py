@@ -41,7 +41,7 @@ from ..functions.parse import (
     assemble_relation_answer,
     parse_single_class,
 )
-from ..scorers import get_scorer
+from ..scorers import deterministic
 from ..scorers.rules import strip_title
 from .parse import TERNARY_DT, _parse_cell
 from .steps import Step, run_steps
@@ -91,7 +91,6 @@ def replay_one_doc(mod, trad_text: str, entities: list[str], max_length: int) ->
 
 def re_replay_stage(
     expanded: DataFrame,
-    scorer: str = "deterministic",
     max_length: int = 1024,
     model_name: str = "mt5",
 ) -> DataFrame:
@@ -99,10 +98,9 @@ def re_replay_stage(
     gate, ``re_inference.py:117``) → + ``{model}_has_relation``,
     ``{model}_output``, ``{model}_pairs_scored``, ``{model}_pairs_skipped``.
     """
-    mod = get_scorer(scorer)
 
     def replay(trad_text, entities):
-        r = replay_one_doc(mod, trad_text, entities, max_length)
+        r = replay_one_doc(deterministic, trad_text, entities, max_length)
         return r["has_relation"], r["output"], r["n_pairs_scored"], r["n_pairs_skipped"]
 
     emits = tuple(
@@ -120,7 +118,6 @@ def re_replay_stage(
 
 def re_pair_predictions(
     pairs: DataFrame,
-    scorer: str = "deterministic",
     max_length: int = 1024,
 ) -> DataFrame:
     """Per-pair predictions over the exploded RE table
@@ -129,7 +126,6 @@ def re_pair_predictions(
     ``evaluate_re_micro`` — the reference's ``evalute_re`` consumer
     (``evalute.py:200-218`` scores exactly this pred-vs-golden column pair).
     """
-    mod = get_scorer(scorer)
 
     @pandas_udf(StringType())
     def pred_udf(text: pd.Series, subj: pd.Series, obj: pd.Series) -> pd.Series:
@@ -138,7 +134,7 @@ def re_pair_predictions(
             head = (t or "")[:max_length]
             cls = None
             for _ in range(RETRY_BUDGET):
-                cls = parse_single_class(mod.score_re_pair(head, s, o))
+                cls = parse_single_class(deterministic.score_re_pair(head, s, o))
                 if cls is not None:
                     break
             out.append(cls if cls is not None else "沒有")
@@ -149,17 +145,15 @@ def re_pair_predictions(
 
 def generation_replay_stage(
     expanded: DataFrame,
-    scorer: str = "deterministic",
     max_length: int = 1024,
     model_name: str = "gen",
 ) -> DataFrame:
     """Doc-level generation replay (M11): one answer text per document over
     the raw text head (reference ``inference.py:90-109`` scores
     ``raw_content[:1024]``; the model emits Traditional triples)."""
-    mod = get_scorer(scorer)
 
     def generate(text):
-        output = mod.score_generate((text or "")[:max_length])
+        output = deterministic.score_generate((text or "")[:max_length])
         return output, HAS_RELATION if output.startswith(HAS_RELATION) else output[:1]
 
     emits = (

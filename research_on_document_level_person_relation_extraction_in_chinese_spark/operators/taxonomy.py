@@ -25,19 +25,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField
 
-from ..scorers import get_scorer
+from ..scorers import deterministic
 from .parse import TERNARY_DT
 from .steps import Step
 
-#: worker-local {scorer: {raw word: class}}; lives as long as the Python
-#: worker, so a reused worker classifies each word once
-_MEMO: dict[str, dict[str, str]] = {}
+#: worker-local {raw word: class}; lives as long as the Python worker, so a
+#: reused worker classifies each word once
+_MEMO: dict[str, str] = {}
 
 
-def build_taxonomy(parsed: DataFrame, annotators=("gemini", "gpt"), scorer: str = "deterministic") -> dict[str, str]:
+def build_taxonomy(parsed: DataFrame, annotators=("gemini", "gpt")) -> dict[str, str]:
     """Global distinct relation words → {raw: class} map (driver-side dict;
     bounded small — the reference memoizes the identical structure)."""
-    mod = get_scorer(scorer)
     cols = [f"{ann}_relations" for ann in annotators]
     distinct_rows = (
         parsed.select(F.explode(F.flatten(F.array(*[F.col(c) for c in cols]))).alias("raw"))
@@ -45,7 +44,7 @@ def build_taxonomy(parsed: DataFrame, annotators=("gemini", "gpt"), scorer: str 
         .collect()
     )
     raws = sorted(r["raw"] for r in distinct_rows)
-    return mod.score_taxonomy(raws)
+    return deterministic.score_taxonomy(raws)
 
 
 def remap_relations(parsed: DataFrame, taxonomy: dict[str, str], cols=("gemini_ternary", "gpt_ternary")) -> DataFrame:
@@ -72,28 +71,23 @@ def remap_relations(parsed: DataFrame, taxonomy: dict[str, str], cols=("gemini_t
     return df
 
 
-def remap_step(
-    scorer: str = "deterministic", cols: tuple[str, ...] = ("gemini_ternary", "gpt_ternary")
-) -> Step:
+def remap_step(cols: tuple[str, ...] = ("gemini_ternary", "gpt_ternary")) -> Step:
     """Rewrite each ternary array's ``rel`` through the taxonomy and
     re-dedup (two raw words in one class may collapse), per document — the
     values ``remap_relations(parsed, build_taxonomy(parsed))`` gives."""
-    mod = get_scorer(scorer)
 
     def classify_new(*columns):
-        memo = _MEMO.setdefault(scorer, {})
-        new = {t["rel"] for col in columns for terns in col for t in terns or ()} - memo.keys()
+        new = {t["rel"] for col in columns for terns in col for t in terns or ()} - _MEMO.keys()
         if new:
-            memo.update(mod.score_taxonomy(sorted(new)))
+            _MEMO.update(deterministic.score_taxonomy(sorted(new)))
 
     def remap(*terns):
-        memo = _MEMO[scorer]
         out = []
         for col in terns:
             if col is None:
                 out.append(None)
                 continue
-            kept = dict.fromkeys((t["subj"], t["obj"], memo.get(t["rel"], "其他")) for t in col)
+            kept = dict.fromkeys((t["subj"], t["obj"], _MEMO.get(t["rel"], "其他")) for t in col)
             out.append([{"subj": s, "obj": o, "rel": r} for s, o, r in kept])
         return out
 

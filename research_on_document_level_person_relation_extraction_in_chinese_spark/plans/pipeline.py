@@ -37,7 +37,6 @@ from ..operators.taxonomy import build_taxonomy, remap_relations  # noqa: F401
 
 def expanded_frame(
     docs: DataFrame,
-    scorer: str = "deterministic",
     ner_sources: tuple[str, ...] = ("ckip",),
     annotators: tuple[str, ...] = ("gemini", "gpt"),
     strict_verify_failure: bool = False,
@@ -57,10 +56,10 @@ def expanded_frame(
     return run_steps(
         zh,
         [
-            annotate_step(scorer, annotators=annotators),
-            remap_step(scorer, cols=tuple(f"{ann}_ternary" for ann in annotators)),
-            consensus_step(scorer, annotators, strict_verify_failure),
-            expand_step(scorer, tuple(ner_sources)),
+            annotate_step(annotators=annotators),
+            remap_step(cols=tuple(f"{ann}_ternary" for ann in annotators)),
+            consensus_step(annotators, strict_verify_failure),
+            expand_step(tuple(ner_sources)),
         ],
     )
 
@@ -76,7 +75,6 @@ def triples_from_expanded(expanded: DataFrame) -> DataFrame:
 
 def extract_triples(
     docs: DataFrame,
-    scorer: str = "deterministic",
     cache: bool = True,
     annotators: tuple[str, ...] = ("gemini", "gpt"),
     strict_verify_failure: bool = False,
@@ -87,7 +85,6 @@ def extract_triples(
     return triples_from_expanded(
         expanded_frame(
             docs,
-            scorer,
             annotators=annotators,
             strict_verify_failure=strict_verify_failure,
         )
@@ -98,16 +95,15 @@ def run_pipeline(
     spark: SparkSession,
     docs: DataFrame,
     catalog: StageCatalog | None = None,
-    scorer: str = "deterministic",
     resume: bool = True,
     with_metrics: bool = True,
     with_replay: bool = False,
 ) -> dict:
     """Full run incl. linking + graph; returns stage DataFrames + metrics.
 
-    With ``catalog``: each listed stage is materialized once (parquet
-    bucketed by url-hash + manifest with lineage/counters); a re-run with
-    ``resume=True`` reads completed stages instead of recomputing.
+    With ``catalog``: each listed stage is materialized once (plain parquet
+    + manifest with lineage/counters); a re-run with ``resume=True`` reads
+    completed stages instead of recomputing.
     ``with_replay`` adds entry point C (per-pair RE replay) as a further
     checkpointable stage over the expanded frame.
     """
@@ -160,7 +156,7 @@ def run_pipeline(
 
     parsed = checkpoint(
         "annotated",
-        lambda: annotate_parse_stage(zh, scorer=scorer),
+        lambda: annotate_parse_stage(zh),
         ["web_pages"],
         detect_metrics,
     )
@@ -178,7 +174,7 @@ def run_pipeline(
 
     cons = checkpoint(
         "consensus",
-        lambda: run_steps(parsed, [remap_step(scorer), consensus_step(scorer)]),
+        lambda: run_steps(parsed, [remap_step(), consensus_step()]),
         ["annotated"],
         consensus_metrics,
     )
@@ -197,11 +193,11 @@ def run_pipeline(
     # without a catalog the stage frames above stay unexecuted views and
     # the expanded frame is the fused chain: one crossing per doc
     expanded = (
-        expanded_frame(docs, scorer=scorer)
+        expanded_frame(docs)
         if catalog is None
         else checkpoint(
             "expanded",
-            lambda: expansion_stage(cons, scorer=scorer),
+            lambda: expansion_stage(cons),
             ["consensus"],
             expansion_metrics,
         )
@@ -213,8 +209,8 @@ def run_pipeline(
     edges = build_edges(triples, linked, nodes)
     if catalog is not None:
         catalog.write_stage(triples, "triples", inputs=["expanded"])
-        catalog.write_stage(nodes, "nodes", inputs=["expanded"], bucket_col="person_id")
-        catalog.write_stage(edges, "edges", inputs=["expanded"], bucket_col="subj_id")
+        catalog.write_stage(nodes, "nodes", inputs=["expanded"])
+        catalog.write_stage(edges, "edges", inputs=["expanded"])
 
     result = {
         "annotated": parsed,
@@ -241,7 +237,7 @@ def run_pipeline(
 
         replayed = checkpoint(
             "re_replay",
-            lambda: re_replay_stage(expanded, scorer=scorer),
+            lambda: re_replay_stage(expanded),
             ["expanded"],
             replay_metrics,
         )

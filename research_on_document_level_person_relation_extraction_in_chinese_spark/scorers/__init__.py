@@ -1,10 +1,10 @@
 """Scorer registry.
 
 The reference's per-document LLM API calls (SURVEY §2.7 M1–M11) become
-pluggable *batched scorers* behind the identical prompt/label schema. The
-deterministic rule-backed implementations are the test/CI default; a real
-model-backed scorer would register under another name and be selected by
-config — the pipeline code is scorer-agnostic.
+deterministic rule-backed scorers behind the identical prompt/label schema
+(``scorers.deterministic``). The extraction steps import that module
+directly; ``get_scorer`` serves the reference port and the benchmark's
+kernel timings.
 """
 
 from __future__ import annotations

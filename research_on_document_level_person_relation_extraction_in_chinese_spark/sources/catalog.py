@@ -2,22 +2,20 @@
 
 The reference checkpoints the whole document table to CSV after every stage
 (reference ``CommonCrawl/data/train/postprecess.py:52,81,128,268``); we keep
-the stage-granular checkpoint idea but as partitioned parquet tables with a
-JSON manifest per snapshot carrying lineage (input stages + their snapshot
-ids) and pipeline counters (extraction/link/classify metrics).
+the stage-granular checkpoint idea but as plain parquet tables with a JSON
+manifest per snapshot carrying lineage (input stages + their snapshot ids)
+and pipeline counters (extraction/link/classify metrics).
 
 On a production cluster these writes become Iceberg ``writeTo(...)`` calls —
 the manifest maps 1:1 onto Iceberg snapshot summary properties; parquet keeps
 the sandbox dependency-free. Each ``write_stage`` commits a NEW snapshot
 (own ``snap-<id>`` data dir + an entry in the per-stage snapshot log, then
 the current-manifest pointer flips — Iceberg's metadata-commit order, so a
-crash mid-commit never corrupts the readable table). ``read_stage(...,
-as_of=...)`` time-travels, ``rollback`` is a metadata flip, and
-``expire_snapshots`` is the data-GC maintenance job. Tables are written
-repartitioned by
-``hash(url)`` so downstream url-keyed joins reuse the layout, and resume is
-per-partition: an interrupted run anti-joins already-processed urls
-(``resume_filter``) exactly like the reference's incremental CSV flush
+crash mid-commit never corrupts the readable table), and ``read_stage(...,
+as_of=...)`` time-travels. A stage is written with its input's
+partitioning, so its files follow the data. Resume is per document: an
+interrupted run anti-joins already-processed urls (``resume_filter``)
+exactly like the reference's incremental CSV flush
 (``sota_ner/gemini_expansion.py:219-221``) but without ever collecting to the
 driver.
 """
@@ -30,7 +28,6 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _write_json(path: str, obj) -> None:
@@ -48,12 +45,9 @@ def _write_json(path: str, obj) -> None:
 def _has_data_files(path: str) -> bool:
     """True when ``path`` holds a file Spark's file listing would read:
     names starting with ``.`` or ``_`` (``_SUCCESS``, ``_temporary``) are
-    skipped, ``_k=v`` partition directories are not."""
+    skipped."""
     for _, dirs, files in os.walk(path):
-        dirs[:] = [
-            d for d in dirs
-            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
-        ]
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
         if any(not f.startswith((".", "_")) for f in files):
             return True
     return False
@@ -77,14 +71,15 @@ class StageCatalog:
 
     def _data_dir(self, name: str, as_of: str | None = None) -> str:
         """Resolve a stage's data directory: the requested snapshot from the
-        chain, else the CURRENT manifest's dir, else the flat legacy/partial
-        path (append_partial writes there before any manifest exists)."""
+        chain, else the CURRENT manifest's dir, else the flat path
+        (append_partial writes there before any manifest exists)."""
         if as_of is not None:
             for snap in self.snapshots(name):
                 if snap["snapshot_id"] == as_of:
                     if not os.path.exists(snap["data_dir"]):
                         raise KeyError(
-                            f"snapshot {as_of!r} of stage {name!r} has been expired"
+                            f"snapshot {as_of!r} of stage {name!r} has no data "
+                            f"directory {snap['data_dir']!r}"
                         )
                     return snap["data_dir"]
             raise KeyError(f"stage {name!r} has no snapshot {as_of!r}")
@@ -100,45 +95,22 @@ class StageCatalog:
         *,
         inputs: list[str] | None = None,
         metrics: dict | None = None,
-        bucket_col: str = "url",
-        n_buckets: int | None = None,
     ) -> str:
-        """Write a stage table; returns its snapshot id.
-
-        When ``bucket_col`` is present, the table is written PARTITIONED by a
-        materialized ``_bucket = pmod(hash(bucket_col), n_buckets)`` column
-        (one directory per bucket, pre-shuffled so each bucket is one file):
-        the Iceberg ``bucket(N, url)`` partition transform in parquet terms.
-        A bucket-filtered ``read_stage(..., bucket=k)`` then PRUNES the scan
-        to that directory (visible as ``PartitionFilters`` in the plan —
-        SURVEY §1.4's url-hash-bucket pruning promise), and the shared layout
-        co-locates url-keyed joins across stages.
-        """
-        spark = df.sparkSession
-        n_buckets = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        schema_json = df.schema.jsonValue()  # logical schema, sans _bucket
+        """Write a stage table as plain parquet in a new snapshot directory,
+        one file per non-empty partition of ``df`` (an empty ``df`` still
+        leaves a schema-only file); returns the snapshot id."""
         snapshot_id = uuid.uuid4().hex[:16]
         # snapshots live in a SIBLING dir that is never itself a parquet read
-        # root (r5 advice): nesting snap-<id> under the flat legacy path
-        # (which append_partial/finalize_stage use as a data_dir) would make
-        # a flat-snapshot read recursively list newer snapshots' files
+        # root: nesting snap-<id> under the flat path (which append_partial/
+        # finalize_stage use as a data_dir) would make a flat-snapshot read
+        # recursively list newer snapshots' files
         data_dir = os.path.join(self._path(f"{name}__snaps"), f"snap-{snapshot_id}")
-        if bucket_col and bucket_col in df.columns:
-            df = df.withColumn(
-                "_bucket", F.pmod(F.hash(F.col(bucket_col)), F.lit(n_buckets))
-            )
-            df = df.repartition(n_buckets, F.col("_bucket"))
-            df.write.mode("overwrite").partitionBy("_bucket").parquet(data_dir)
-        else:
-            df.write.mode("overwrite").parquet(data_dir)
-
+        df.write.mode("overwrite").parquet(data_dir)
         return self._write_manifest(
             name,
             inputs=inputs,
             metrics=metrics,
-            schema_json=schema_json,
-            bucket_col=bucket_col,
-            n_buckets=n_buckets,
+            schema_json=df.schema.jsonValue(),
             snapshot_id=snapshot_id,
             data_dir=data_dir,
         )
@@ -153,8 +125,6 @@ class StageCatalog:
         inputs: list[str] | None,
         metrics: dict | None,
         schema_json: dict,
-        bucket_col: str | None,
-        n_buckets: int,
         snapshot_id: str | None = None,
         data_dir: str | None = None,
     ) -> str:
@@ -173,8 +143,6 @@ class StageCatalog:
             "inputs": parents,
             "metrics": metrics or {},
             "schema": schema_json,
-            "bucket_col": bucket_col,
-            "n_buckets": n_buckets,
             "data_dir": data_dir or self._path(name),
         }
         # append to the snapshot chain FIRST, then flip the current pointer
@@ -194,40 +162,6 @@ class StageCatalog:
                 return json.load(f)
         except FileNotFoundError:
             return []
-
-    def rollback(self, name: str, snapshot_id: str) -> None:
-        """Point the stage's CURRENT manifest back at an older snapshot (the
-        Iceberg ``rollback_to_snapshot`` procedure): pure metadata flip, the
-        data dirs never move. The rollback itself is appended to the chain
-        so lineage records that it happened."""
-        for snap in self.snapshots(name):
-            if snap["snapshot_id"] == snapshot_id:
-                _write_json(self._manifest_path(name), snap)
-                return
-        raise KeyError(f"stage {name!r} has no snapshot {snapshot_id!r}")
-
-    def expire_snapshots(self, name: str, keep_last: int = 2) -> list[str]:
-        """Drop the data of all but the newest ``keep_last`` snapshots (and
-        never the CURRENT one, even if it is older — e.g. after a rollback):
-        Iceberg's ``expire_snapshots`` maintenance job. Returns the expired
-        snapshot ids; time-travel to them afterwards raises."""
-        import shutil
-
-        log = self.snapshots(name)
-        current = self.manifest(name)["snapshot_id"] if log else None
-        keep_ids = {s["snapshot_id"] for s in log[-keep_last:]} | {current}
-        expired = []
-        kept = []
-        for snap in log:
-            sid = snap["snapshot_id"]
-            if sid in keep_ids:
-                kept.append(snap)
-                continue
-            if snap["data_dir"] != self._path(name):
-                shutil.rmtree(snap["data_dir"], ignore_errors=True)
-            expired.append(sid)
-        _write_json(self._snapshot_log_path(name), kept)
-        return expired
 
     def append_partial(self, df: DataFrame, name: str) -> None:
         """Incremental, KILL-SAFE flush into an un-finalized stage table:
@@ -256,30 +190,15 @@ class StageCatalog:
             inputs=inputs,
             metrics=metrics,
             schema_json=schema_json,
-            bucket_col=None,
-            n_buckets=0,
         )
 
     def read_stage(
-        self,
-        spark: SparkSession,
-        name: str,
-        bucket: int | None = None,
-        keep_bucket: bool = False,
-        as_of: str | None = None,
+        self, spark: SparkSession, name: str, as_of: str | None = None
     ) -> DataFrame:
-        """Read a stage table. ``bucket=k`` filters on the ``_bucket``
-        partition column — a directory-pruned scan (only that bucket's files
-        are listed/read); the synthetic ``_bucket`` column is dropped unless
-        ``keep_bucket`` so consumers see the logical stage schema.
-        ``as_of=<snapshot_id>`` time-travels to an older snapshot in the
-        chain (Iceberg ``VERSION AS OF``)."""
-        df = spark.read.parquet(self._data_dir(name, as_of))
-        if bucket is not None:
-            df = df.where(F.col("_bucket") == bucket)
-        if "_bucket" in df.columns and not keep_bucket:
-            df = df.drop("_bucket")
-        return df
+        """Read a stage table: its current snapshot, or with
+        ``as_of=<snapshot_id>`` an older snapshot in the chain (Iceberg
+        ``VERSION AS OF``)."""
+        return spark.read.parquet(self._data_dir(name, as_of))
 
     def manifest(self, name: str) -> dict:
         with open(self._manifest_path(name), encoding="utf-8") as f:

@@ -24,7 +24,6 @@ def stream_extract_triples(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    scorer: str = "deterministic",
     available_now: bool = True,
 ):
     """Start (and with ``available_now`` await) the streaming extraction.
@@ -43,7 +42,7 @@ def stream_extract_triples(
     )
 
     def process(batch_df, batch_id: int):
-        triples = extract_triples(batch_df, scorer=scorer)
+        triples = extract_triples(batch_df)
         triples.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
 
     writer = stream.writeStream.foreachBatch(process).option(

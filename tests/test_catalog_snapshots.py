@@ -1,13 +1,12 @@
 """Iceberg-style snapshot chain on the stage catalog (sources/catalog.py):
-every write_stage commits a new snapshot, reads default to the newest,
-as_of time-travels, rollback is a metadata flip, expire_snapshots drops old
-data (but never the current snapshot), and the resume/bucket paths still
-work on the versioned layout."""
+every write_stage commits a new snapshot of plain parquet, reads default to
+the newest, as_of time-travels, and the resume paths still work on the
+versioned layout."""
 
 import os
+import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from research_on_document_level_person_relation_extraction_in_chinese_spark.sources.catalog import (
     StageCatalog,
@@ -24,43 +23,35 @@ def cat(tmp_path):
     return StageCatalog(str(tmp_path / "cat"))
 
 
-def test_timetravel_and_rollback(spark, cat):
+def test_timetravel(spark, cat):
     s1 = cat.write_stage(_rows(spark, range(3)), "docs")
     s2 = cat.write_stage(_rows(spark, range(5)), "docs")
     assert [s["snapshot_id"] for s in cat.snapshots("docs")] == [s1, s2]
     assert cat.read_stage(spark, "docs").count() == 5
     assert cat.read_stage(spark, "docs", as_of=s1).count() == 3
     assert cat.manifest("docs")["snapshot_id"] == s2
-
-    cat.rollback("docs", s1)
-    assert cat.read_stage(spark, "docs").count() == 3
-    assert cat.has_stage("docs")
-    # the newer snapshot is still reachable by id after the rollback
-    assert cat.read_stage(spark, "docs", as_of=s2).count() == 5
     with pytest.raises(KeyError):
-        cat.rollback("docs", "nope")
-
-
-def test_expire_keeps_current_and_recent(spark, cat):
-    sids = [cat.write_stage(_rows(spark, range(n)), "d") for n in (2, 3, 4, 5)]
-    cat.rollback("d", sids[0])  # current = OLDEST
-    expired = cat.expire_snapshots("d", keep_last=2)
-    assert set(expired) == {sids[1]}  # oldest is current → kept; newest 2 kept
-    assert cat.read_stage(spark, "d").count() == 2  # current survived GC
-    assert cat.read_stage(spark, "d", as_of=sids[3]).count() == 5
+        cat.read_stage(spark, "docs", as_of="nope")
+    # a snapshot whose data directory is gone cannot be read as of
+    shutil.rmtree(cat.snapshots("docs")[0]["data_dir"])
     with pytest.raises(KeyError):
-        cat.read_stage(spark, "d", as_of=sids[1])
+        cat.read_stage(spark, "docs", as_of=s1)
+    assert cat.read_stage(spark, "docs").count() == 5
 
 
-def test_bucket_pruning_survives_versioning(spark, cat):
-    cat.write_stage(_rows(spark, range(40)), "b", bucket_col="url", n_buckets=4)
-    df = cat.read_stage(spark, "b", bucket=2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "_bucket" in plan
-    total = sum(
-        cat.read_stage(spark, "b", bucket=k).count() for k in range(4)
-    )
-    assert total == 40
+def test_stage_written_as_plain_parquet(spark, cat):
+    """A stage keeps its input's partitioning: at most one data file per
+    input partition, no partition subdirectories, no layout keys in the
+    manifest, and the stage reads back with the written columns."""
+    k = 3
+    df = _rows(spark, range(40)).repartition(k)
+    cat.write_stage(df, "plain")
+    data_dir = cat.manifest("plain")["data_dir"]
+    entries = os.listdir(data_dir)
+    assert len([f for f in entries if not f.startswith((".", "_"))]) <= k
+    assert not any(e.startswith("_bucket=") for e in entries)
+    assert not {"bucket_col", "n_buckets"} & cat.manifest("plain").keys()
+    assert cat.read_stage(spark, "plain").columns == df.columns
 
 
 def test_resume_filter_uses_current_snapshot(spark, cat):

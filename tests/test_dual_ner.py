@@ -28,9 +28,7 @@ def docs(spark):
 
 @pytest.fixture(scope="module")
 def expanded(spark, docs):
-    return expanded_frame(
-        docs, "deterministic", ner_sources=("ckip", "gemini", "union")
-    ).cache()
+    return expanded_frame(docs, ner_sources=("ckip", "gemini", "union")).cache()
 
 
 @pytest.fixture(scope="module")
@@ -99,7 +97,7 @@ def test_single_source_default_unchanged(spark, docs, expanded):
     """ner_sources=('ckip',) (the flagship default) produces identical
     merge_label output to the multi-source run — the extra sources are
     strictly additive columns."""
-    single = expanded_frame(docs, "deterministic").cache()
+    single = expanded_frame(docs).cache()
     try:
         assert _explode(single, "merge_label") == _explode(expanded, "merge_label")
         assert "gemini_ner" not in single.columns

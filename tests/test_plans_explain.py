@@ -123,41 +123,6 @@ def test_simhash_near_dups_plan_shape(spark):
     assert "PushedFilters" in plan and "LessThan(doc_id,400)" in plan
 
 
-def test_stage_catalog_bucket_pruning(spark, tmp_path):
-    """SURVEY §1.4/§7 promise: a bucket-filtered read of a checkpointed stage
-    prunes partitions at the file-listing level — the filter shows up as a
-    PartitionFilter on the synthetic _bucket column, not a post-scan
-    predicate, and the bucket contents equal the hash-derived subset."""
-    import pyspark.sql.functions as F
-
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.sources.catalog import (
-        StageCatalog,
-    )
-
-    cat = StageCatalog(str(tmp_path / "stages"))
-    df = spark.range(0, 1000).select(
-        F.concat(F.lit("https://x/"), F.col("id").cast("string")).alias("url"),
-        F.col("id").alias("payload"),
-    )
-    cat.write_stage(df, "annotated", n_buckets=8)
-
-    pruned = cat.read_stage(spark, "annotated", bucket=3)
-    plan = _plan(pruned)
-    pf_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf_lines and "_bucket" in pf_lines[0], plan
-    # the predicate is satisfied by pruning alone — no _bucket filter remains
-    # in the data-filter position (the scan may have no PushedFilters at all)
-    assert not any(
-        "PushedFilters" in l and "_bucket" in l for l in plan.splitlines()
-    ), plan
-    # consumers see the logical schema (no synthetic column)
-    assert "_bucket" not in pruned.columns
-    expected = df.where(F.pmod(F.hash("url"), F.lit(8)) == 3)
-    assert pruned.count() == expected.count() > 0
-    # and the full read still returns everything
-    assert cat.read_stage(spark, "annotated").count() == 1000
-
-
 def test_pipeline_plan_is_narrow_until_distinct(spark):
     """The extraction chain must contain no shuffle (Exchange) before the
     final distinct — the whole per-document flow is pipelined in one stage."""

@@ -40,7 +40,7 @@ def docs(spark):
 
 @pytest.fixture(scope="module")
 def expanded(spark, docs):
-    return expanded_frame(docs, "deterministic").cache()
+    return expanded_frame(docs).cache()
 
 
 @pytest.fixture(scope="module")

@@ -85,3 +85,21 @@ def test_append_partial_and_finalize(spark, tmp_path):
     assert cat.manifest("annotated")["metrics"] == {"n_docs": N}
     # nothing left to resume
     assert resume_filter(docs, cat, "annotated").count() == 0
+
+
+def test_corpus_without_zh_docs_through_catalog(spark, tmp_path):
+    """A corpus with no zh document gives empty stages; each still commits
+    and reads back, so the catalog run, and its resume, equal the
+    catalog-free run (empty triples, nodes and edges)."""
+    docs = generate_corpus(spark, 40, seed=42).filter(F.col("lang") != "zh").cache()
+    assert docs.count() > 0
+
+    def outputs(res):
+        return {k: sorted(map(tuple, res[k].collect())) for k in ("triples", "nodes", "edges")}
+
+    expected = outputs(run_pipeline(spark, docs, catalog=None, with_metrics=False))
+    assert expected == {"triples": [], "nodes": [], "edges": []}
+    cat = StageCatalog(str(tmp_path / "stages"))
+    assert outputs(run_pipeline(spark, docs, catalog=cat)) == expected
+    assert cat.has_stage("expanded")
+    assert outputs(run_pipeline(spark, docs, catalog=cat, resume=True)) == expected

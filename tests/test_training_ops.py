@@ -19,7 +19,7 @@ from research_on_document_level_person_relation_extraction_in_chinese_spark.sour
 @pytest.fixture(scope="module")
 def expanded(spark):
     docs = generate_corpus(spark, 200, seed=42)
-    return expanded_frame(docs, "deterministic").cache()
+    return expanded_frame(docs).cache()
 
 
 def test_training_pairs(spark, expanded):
