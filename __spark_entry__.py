@@ -1043,7 +1043,7 @@ def q_kg_nodes_pipeline(spark, sf_dir):
     """Pipeline node table (linking + CC + build_nodes over the real corpus),
     projected on canonical_name so the Spark-only xxhash64 person_id doesn't
     block the value oracle (the id is just xxhash64(canonical_name); its
-    derivation stays covered by kg_nodes/kg_edges and the pytest e2e)."""
+    derivation stays covered by the pytest e2e and linking tests)."""
     nodes = _pipeline_graph(spark)["nodes"]
     return nodes.select(
         "canonical_name", F.size("aliases").alias("n_aliases"), "n_docs"
@@ -1051,8 +1051,8 @@ def q_kg_nodes_pipeline(spark, sf_dir):
 
 
 def q_kg_edges_pipeline(spark, sf_dir):
-    """Pipeline edge table re-keyed to canonical names (same trick as
-    kg_edges) — alias resolution, fallback-to-surface-form coalesce, and the
+    """Pipeline edge table re-keyed to canonical names (DuckDB has no
+    xxhash64) — alias resolution, fallback-to-surface-form coalesce, and the
     countDistinct(url) weights are all value-checked against the port."""
     res = _pipeline_graph(spark)
     nn = res["nodes"].select("person_id", "canonical_name")
@@ -1067,95 +1067,6 @@ def q_kg_edges_pipeline(spark, sf_dir):
         .join(sn, "subj_id")
         .join(on, "obj_id")
         .select("subj_name", "obj_name", "rel", "n_docs")
-    )
-
-
-def _kg_link_fixture(spark, sf_dir):
-    """Deterministic two-person mention fixture from ``customer`` (the
-    md5-derivation trick of coref_mentions, byte-identical in DuckDB): each
-    customer row is one document mentioning person A's full name, an
-    h5-selected variant (title-suffixed full and/or bare given-name
-    nickname), and person B's full name — plus one (subj, obj, rel) triple
-    whose subj is the VARIANT form, so edge building must resolve aliases
-    through the fuzzy-linking components. Gives build_nodes/build_edges a
-    full VALUE oracle (recursive-CTE CC in DuckDB, like dedup_groups)."""
-    c = _t(spark, sf_dir, "customer")
-    md5 = F.md5(F.col("c_custkey").cast("string"))
-
-    def hx(pos: int, mod: int):
-        return F.conv(F.substring(md5, pos, 4), 16, 10).cast("long") % mod
-
-    sur_arr = F.array(*[F.lit(s) for s in "王李陳林張黃吳劉"])
-    g1 = F.array(*[F.lit(s) for s in "志美家文"])
-    g2 = F.array(*[F.lit(s) for s in "明玲豪君"])
-    titles = F.array(F.lit("博士"), F.lit("教授"), F.lit("先生"), F.lit("老師"))
-
-    def pick(arr, h):
-        return F.element_at(arr, (h + 1).cast("int"))
-
-    given_a = F.concat(pick(g1, hx(5, 4)), pick(g2, hx(9, 4)))
-    full_a = F.concat(pick(sur_arr, hx(1, 8)), given_a)
-    title = pick(titles, hx(13, 4))
-    full_b = F.concat(pick(sur_arr, hx(21, 8)), pick(g1, hx(25, 4)), pick(g2, hx(29, 4)))
-    h5 = hx(17, 3)
-    mentions = F.array_compact(
-        F.array(
-            full_a,
-            F.when(h5 != 1, F.concat(full_a, title)),
-            F.when(h5 >= 1, given_a),
-            full_b,
-        )
-    )
-    url = F.concat(F.lit("u"), F.col("c_custkey").cast("string"))
-    expanded = c.select(url.alias("url"), mentions.alias("ckip_entity"))
-    triples = c.select(
-        url.alias("url"),
-        F.when(h5 == 0, F.concat(full_a, title)).otherwise(given_a).alias("subj"),
-        full_b.alias("obj"),
-        pick(F.array(F.lit("夫妻"), F.lit("師生"), F.lit("朋友")), hx(13, 3)).alias("rel"),
-    )
-    return expanded, triples
-
-
-def _kg_linked_nodes(spark, sf_dir):
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.graph import (
-        build_nodes,
-    )
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.linking import (
-        link_entities,
-    )
-
-    expanded, triples = _kg_link_fixture(spark, sf_dir)
-    linked = link_entities(expanded, fuzzy=True, n_salt=3)
-    return linked, build_nodes(linked), triples
-
-
-def q_kg_nodes(spark, sf_dir):
-    """Node building VALUE gate (round-3 verdict item 4): fuzzy entity
-    linking (exact-norm + bigram-Jaccard/containment edges, salted blocks) →
-    large-star/small-star CC → build_nodes, against a DuckDB recursive-CTE
-    min-label closure over the identical deterministic fixture."""
-    _, nodes, _ = _kg_linked_nodes(spark, sf_dir)
-    return nodes.select(
-        "canonical_name", F.size("aliases").alias("n_aliases"), "n_docs"
-    )
-
-
-def q_kg_edges(spark, sf_dir):
-    """Edge building VALUE gate: alias-form triples resolved through the
-    linked components into id-keyed edges (build_edges, AQE-decided joins),
-    re-keyed to canonical names so DuckDB can reproduce values without
-    Spark's xxhash64."""
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.graph import (
-        build_edges,
-    )
-
-    linked, nodes, triples = _kg_linked_nodes(spark, sf_dir)
-    edges = build_edges(triples, linked, nodes)
-    sn = nodes.select(F.col("person_id").alias("subj_id"), F.col("canonical_name").alias("subj_name"))
-    on = nodes.select(F.col("person_id").alias("obj_id"), F.col("canonical_name").alias("obj_name"))
-    return edges.join(sn, "subj_id").join(on, "obj_id").select(
-        "subj_name", "obj_name", "rel", "n_docs"
     )
 
 
@@ -1481,8 +1392,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_canonicalize": q_url_canonicalize,
         "gopher_quality": q_gopher_quality,
         "dedup_groups": q_dedup_groups,
-        "kg_nodes": q_kg_nodes,
-        "kg_edges": q_kg_edges,
         "kg_pagerank": q_kg_pagerank,
         "exact_median": q_exact_median,
         "width_normalize": q_width_normalize,
@@ -1681,88 +1590,6 @@ def _lpa_sql(iters: int = 4) -> str:
         )
     parts.append(f"\n    SELECT id, label FROM l{iters}")
     return "".join(parts)
-
-# Shared CTE prefix for the kg_nodes / kg_edges value oracles: rebuilds the
-# _kg_link_fixture mention corpus, the fuzzy-linking edge predicate
-# (exact-norm OR char-bigram Jaccard >= 0.5 OR strict-suffix containment over
-# the surname + given-name blocks — operators/linking.py), and a recursive-CTE
-# min-label transitive closure standing in for the large-star/small-star CC.
-_KG_LINK_CTE = """
-    WITH RECURSIVE h AS (
-        SELECT c_custkey, md5(CAST(c_custkey AS VARCHAR)) AS m FROM customer
-    ), parts AS (
-        SELECT c_custkey,
-            CAST('0x' || substr(m, 1, 4) AS BIGINT) % 8 AS h1,
-            CAST('0x' || substr(m, 5, 4) AS BIGINT) % 4 AS h2,
-            CAST('0x' || substr(m, 9, 4) AS BIGINT) % 4 AS h3,
-            CAST('0x' || substr(m, 13, 4) AS BIGINT) % 4 AS h4,
-            CAST('0x' || substr(m, 13, 4) AS BIGINT) % 3 AS h9,
-            CAST('0x' || substr(m, 17, 4) AS BIGINT) % 3 AS h5,
-            CAST('0x' || substr(m, 21, 4) AS BIGINT) % 8 AS h6,
-            CAST('0x' || substr(m, 25, 4) AS BIGINT) % 4 AS h7,
-            CAST('0x' || substr(m, 29, 4) AS BIGINT) % 4 AS h8
-        FROM h
-    ), named AS (
-        SELECT 'u' || CAST(c_custkey AS VARCHAR) AS url,
-            list_extract(['王','李','陳','林','張','黃','吳','劉'], CAST(h1+1 AS INTEGER))
-              || list_extract(['志','美','家','文'], CAST(h2+1 AS INTEGER))
-              || list_extract(['明','玲','豪','君'], CAST(h3+1 AS INTEGER)) AS fulla,
-            list_extract(['志','美','家','文'], CAST(h2+1 AS INTEGER))
-              || list_extract(['明','玲','豪','君'], CAST(h3+1 AS INTEGER)) AS givena,
-            list_extract(['博士','教授','先生','老師'], CAST(h4+1 AS INTEGER)) AS title,
-            list_extract(['王','李','陳','林','張','黃','吳','劉'], CAST(h6+1 AS INTEGER))
-              || list_extract(['志','美','家','文'], CAST(h7+1 AS INTEGER))
-              || list_extract(['明','玲','豪','君'], CAST(h8+1 AS INTEGER)) AS fullb,
-            h5,
-            list_extract(['夫妻','師生','朋友'], CAST(h9+1 AS INTEGER)) AS rel
-        FROM parts
-    ), doc_mentions AS (
-        SELECT DISTINCT url, mention FROM (
-            SELECT url, unnest(list_filter([
-                fulla,
-                CASE WHEN h5 != 1 THEN fulla || title END,
-                CASE WHEN h5 >= 1 THEN givena END,
-                fullb], x -> x IS NOT NULL)) AS mention
-            FROM named
-        )
-    ), mt AS (
-        SELECT mention, CAST(count(DISTINCT url) AS BIGINT) AS n_docs,
-               regexp_replace(mention, '(博士|教授|先生|老師)$', '') AS norm
-        FROM doc_mentions GROUP BY mention
-    ), blocked AS (
-        SELECT mention, norm,
-               unnest(['s|' || substr(norm, 1, 1),
-                       'g|' || substr(norm, length(norm) - 1, 2)]) AS block
-        FROM mt WHERE length(norm) >= 2
-    ), cand AS (
-        SELECT DISTINCT a.mention AS src, a.norm AS na, b.mention AS dst, b.norm AS nb
-        FROM blocked a JOIN blocked b ON a.block = b.block AND a.mention < b.mention
-    ), scored AS (
-        SELECT src, dst FROM (
-            SELECT src, dst, na, nb,
-                list_distinct(list_transform(range(1, length(na)),
-                    i -> substr(na, CAST(i AS INTEGER), 2))) AS ba,
-                list_distinct(list_transform(range(1, length(nb)),
-                    i -> substr(nb, CAST(i AS INTEGER), 2))) AS bb
-            FROM cand
-        )
-        WHERE na = nb
-           OR CAST(len(list_intersect(ba, bb)) AS DOUBLE)
-              / len(list_distinct(list_concat(ba, bb))) >= 0.5
-           OR (length(na) > length(nb) AND ends_with(na, nb))
-           OR (length(nb) > length(na) AND ends_with(nb, na))
-    ), e AS (
-        SELECT src AS efrom, dst AS eto FROM scored
-        UNION SELECT dst, src FROM scored
-    ), reach(id, lbl) AS (
-        SELECT mention, mention FROM mt
-        UNION
-        SELECT e.efrom, r.lbl FROM e JOIN reach r ON r.id = e.eto
-    ), comp AS (
-        SELECT id AS mention, min(lbl) AS component FROM reach GROUP BY id
-    )
-"""
-
 
 def _ann_banded_sql(threshold=0.4, n_planes=16, bands=4, seed="ann", dim=64, max_id=2000) -> str:
     """Generated oracle for q_ann_banded_near_dups: the SAME literal
@@ -2810,36 +2637,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "embedding_near_dups": _ann_banded_sql(seed="emb"),
         "ann_banded_near_dups": _ann_banded_sql(),
-        "kg_nodes": _KG_LINK_CTE + """
-            SELECT min(m.norm) AS canonical_name,
-                   CAST(count(DISTINCT m.mention) AS INTEGER) AS n_aliases,
-                   CAST(sum(m.n_docs) AS BIGINT) AS n_docs
-            FROM mt m JOIN comp c ON m.mention = c.mention
-            GROUP BY c.component
-        """,
-        "kg_edges": _KG_LINK_CTE + """,
-            cn AS (
-                SELECT c.component, min(m.norm) AS canonical_name
-                FROM mt m JOIN comp c ON m.mention = c.mention
-                GROUP BY c.component
-            ),
-            resolve AS (
-                SELECT c.mention, cn.canonical_name
-                FROM comp c JOIN cn ON c.component = cn.component
-            ),
-            tr AS (
-                SELECT url,
-                       CASE WHEN h5 = 0 THEN fulla || title ELSE givena END AS subj,
-                       fullb AS obj, rel
-                FROM named
-            )
-            SELECT rs.canonical_name AS subj_name, ro.canonical_name AS obj_name,
-                   rel, CAST(count(DISTINCT url) AS BIGINT) AS n_docs
-            FROM tr
-            JOIN resolve rs ON tr.subj = rs.mention
-            JOIN resolve ro ON tr.obj = ro.mention
-            GROUP BY 1, 2, 3
-        """,
         "kg_pagerank_values": _pagerank_sql(iters=10, damping=0.85),
         "kmeans_centroids": _kmeans_sql(k=8, iters=4, dim=64),
         "semdedup": _semdedup_sql(k=8, iters=2, dim=64, threshold=0.35),

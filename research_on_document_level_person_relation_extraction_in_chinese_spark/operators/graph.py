@@ -13,26 +13,28 @@ from pyspark.sql import functions as F
 
 
 def build_nodes(linked: DataFrame) -> DataFrame:
-    """linked = (mention, norm, n_docs, component) → person nodes."""
+    """linked = (mention, norm, n_docs, component) → person nodes. The
+    component is its person's minimum norm (``link_entities``), so it is
+    the canonical name."""
     return (
         linked.groupBy("component")
         .agg(
-            F.min("norm").alias("canonical_name"),
             F.sort_array(F.collect_set("mention")).alias("aliases"),
-            F.sum("n_docs").alias("n_mention_docs"),
+            F.sum("n_docs").alias("n_docs"),
         )
-        .withColumn("person_id", F.xxhash64("canonical_name"))
         .select(
-            "person_id",
-            "canonical_name",
+            F.xxhash64("component").alias("person_id"),
+            F.col("component").alias("canonical_name"),
             "aliases",
-            F.col("n_mention_docs").alias("n_docs"),
+            "n_docs",
         )
     )
 
 
 def build_edges(triples: DataFrame, linked: DataFrame, nodes: DataFrame) -> DataFrame:
     """triples(url, subj, obj, rel) + alias table → id-keyed relation edges.
+    A mention resolves to ``xxhash64(component)``, its node's person id;
+    ``nodes`` is not read.
 
     Scale shape: the mention→person resolve table is NOT broadcast-hinted —
     at web scale (10^12 docs) the distinct-mention table is itself huge
@@ -44,13 +46,7 @@ def build_edges(triples: DataFrame, linked: DataFrame, nodes: DataFrame) -> Data
     to a shuffled join otherwise. ``test_plans_explain`` asserts the plan
     carries no mandatory broadcast hint.
     """
-    canon = linked.groupBy("component").agg(F.min("norm").alias("canonical_name"))
-    resolve = (
-        linked.select("mention", "component")
-        .join(canon, on="component")
-        .withColumn("person_id", F.xxhash64("canonical_name"))
-        .select("mention", "person_id")
-    )
+    resolve = linked.select("mention", F.xxhash64("component").alias("person_id"))
     resolved = (
         triples.join(resolve.withColumnRenamed("mention", "subj"), on="subj", how="left")
         .withColumnRenamed("person_id", "subj_id")

@@ -5,18 +5,22 @@ Person mentions (NER surface forms: canonical names, simplified-script
 spellings, title-suffixed aliases) are normalized (title strip + s2t).
 Mentions with equal normalized names are one person by definition, so the
 default (exact) linking is the norm itself and needs no graph pass. Fuzzy
-linking works on the distinct norms: blocked self-join, pairwise
-similarity, then an iterative DataFrame connected-components loop
+linking adds similarity edges between distinct norms that occur in one
+document, then runs an iterative DataFrame connected-components loop
 (alternating large-star / small-star, GraphFrames-like, no external
 dependency, O(log n) rounds on any graph shape) that stops as soon as the
 edges form a star forest.
 
-Scale notes: linking norms instead of mentions shrinks the fuzzy self-join
-and the graph by every title and script variant of a name. Hot surname
-blocks (陳/林/王 skew) go through the salted off-diagonal join
-(``_salted_block_pairs``). Each connected-components round pays one
-``localCheckpoint`` (cuts the growing lineage) and one exact star-forest
-test; an input that is already star-shaped pays no round at all.
+Scale notes: a fuzzy pair must co-occur in a document, so each document's
+own distinct norms list every candidate pair (the document is the most
+selective signature, as in filter-and-verify set-similarity joins). The
+pairs are built inside each row's norm array with higher-order functions
+and filtered map-side; the surname and given-name blocks are a predicate on
+the pair, not a shuffle key, so no join follows the 陳/林/黃 surname skew and
+the candidate count grows with the documents, bounded by names per
+document. Each connected-components round pays one ``localCheckpoint``
+(cuts the growing lineage) and one exact star-forest test; an input that
+is already star-shaped pays no round at all.
 """
 
 from __future__ import annotations
@@ -72,42 +76,55 @@ def mention_edges(mentions: DataFrame) -> DataFrame:
 
 
 def _char_bigrams(col):
-    """Distinct character bigrams of a name (JVM HOF, no UDF); single-char
-    names shingle to themselves (sequence(1,0) would run DESCENDING)."""
+    """Distinct character bigrams of a name of ≥2 chars (JVM HOF, no UDF;
+    on a shorter name sequence(1, 0) would run descending)."""
     return F.array_distinct(
-        F.when(F.length(col) < 2, F.array(col)).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.length(col) - F.lit(1)),
-                lambda i: F.substring(col, i, F.lit(2)),
-            )
+        F.transform(
+            F.sequence(F.lit(1), F.length(col) - F.lit(1)),
+            lambda i: F.substring(col, i, F.lit(2)),
         )
     )
 
 
-def _salted_block_pairs(m: DataFrame, n_salt: int) -> DataFrame:
-    """Self-join on ``block`` → candidate pairs (a.* , b.*), a.mention <
-    b.mention, each unordered pair exactly once per block.
-
-    ``n_salt > 1`` splits every block into salt sub-keys (left side keeps
-    its own hash-salt, right side replicates across all salts) so a hot
-    block — the 陳/林/王 surname skew, where one surname covers several
-    percent of all Chinese names — shuffles as ``n_salt`` balanced
-    sub-blocks instead of one straggler partition. Replication factor is
-    ``n_salt`` on the right side only; results are identical to the
-    unsalted join (asserted in tests/test_linking_cc.py)."""
-    if n_salt <= 1:
-        a, b = m.alias("a"), m.alias("b")
-        return a.join(b, on="block").where(F.col("a.mention") < F.col("b.mention"))
-    left = m.withColumn(
-        "_salt", F.pmod(F.xxhash64("mention"), F.lit(n_salt)).cast("int")
+def _similar(na, nb, theta: float):
+    """The fuzzy pair predicate on two norms: they share a block — the
+    surname block (same first character: same-surname spelling variants) or
+    the given-name block (same last two characters: a nickname, the given
+    name without the surname, shares it with the full name) — AND their
+    char-bigram Jaccard is ≥ ``theta`` or the shorter (≥2 chars) is a
+    strict suffix of the longer (the nickname shape)."""
+    block = (F.substring(na, 1, 1) == F.substring(nb, 1, 1)) | (
+        F.substring(na, -2, 2) == F.substring(nb, -2, 2)
     )
-    right = m.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
+    bga, bgb = _char_bigrams(na), _char_bigrams(nb)
+    jaccard = F.size(F.array_intersect(bga, bgb)) / F.size(F.array_union(bga, bgb))
+    containment = (F.length(na) != F.length(nb)) & (na.endswith(nb) | nb.endswith(na))
+    return block & ((jaccard >= F.lit(theta)) | containment)
+
+
+def _doc_pair_edges(docs: DataFrame, theta: float) -> DataFrame:
+    """``docs.names`` = one document's distinct names, an
+    ``array<struct<id, norm>>`` → similarity edges (src, dst), src < dst,
+    one row per document and pair (not deduplicated).
+
+    The pairs are built inside the array (higher-order functions, no UDF),
+    exploded and filtered with ``_similar``: a map-side scan with no join
+    and no shuffle, whose cost is bounded by names per document rather
+    than by the largest surname block."""
+    names = F.col("names")
+    pairs = F.flatten(
+        F.transform(
+            names,
+            lambda a: F.transform(
+                F.filter(names, lambda b: b["id"] < a["id"]),
+                lambda b: F.struct(b.alias("s"), a.alias("d")),
+            ),
+        )
     )
     return (
-        left.alias("a")
-        .join(right.alias("b"), on=["block", "_salt"])
-        .where(F.col("a.mention") < F.col("b.mention"))
+        docs.select(F.explode(pairs).alias("p"))
+        .where(_similar(F.col("p.s.norm"), F.col("p.d.norm"), theta))
+        .select(F.col("p.s.id").alias("src"), F.col("p.d.id").alias("dst"))
     )
 
 
@@ -117,64 +134,29 @@ def fuzzy_mention_edges(
     n_salt: int = 1,
     context: DataFrame | None = None,
 ) -> DataFrame:
-    """Fuzzy similarity edges (north rule: blocking + PAIRWISE name/context
-    similarity) — catches variant spellings the exact-norm rule never merges
-    (nicknames 志玲↔林志玲, partial given names), opt-in so the default
-    pipeline keeps reference parity.
+    """Fuzzy similarity edges (src, dst), src < dst, between the distinct
+    mentions of ``mentions`` (mention, norm) whose norms (≥2 chars) pass
+    ``_similar`` and that co-occur in at least one document of ``context``
+    (url, mention) — the precision guard against a bare given name bridging
+    two different full names (志玲 ↔ 林志玲/王志玲 in unrelated docs).
 
-    Blocking (union of two keys, so recall survives both variant families):
-    - surname block (first char of norm): same-surname spelling variants;
-    - given-name block (last two chars): nickname = given name without the
-      surname shares this key with the full name.
-    Candidates then pass a pairwise predicate: char-bigram Jaccard(norm_a,
-    norm_b) ≥ ``theta`` OR strict-suffix containment (the shorter norm, ≥2
-    chars, is the longer's suffix — the nickname shape; reference cost
-    context: aliases multiply pair-scoring in sota_ner/ckip_expansion.py:22-23).
-
-    ``context`` (optional, (url, mention) doc co-occurrence) keeps only
-    pairs that co-occur in ≥1 document — the precision guard against a bare
-    given name bridging two different full names (志玲 ↔ 林志玲/王志玲 in
-    unrelated corpora). At 100 TB you'd bound docs-per-mention first; the
-    semi-join shape itself is shuffle-on-mention, no collect.
-
-    ``n_salt`` routes the block self-join through the salted off-diagonal
-    path for hot-surname skew (see ``_salted_block_pairs``)."""
-    m = mentions.select("mention", "norm").where(F.length("norm") >= 2)
-    sur_block = F.concat(F.lit("s|"), F.substring("norm", 1, 1))
-    given_block = F.concat(
-        F.lit("g|"), F.substring(F.col("norm"), F.length("norm") - F.lit(1), F.lit(2))
+    The mention-level form of the pairs ``link_entities(fuzzy=True)``
+    builds: ``context`` is grouped by url into per-document name arrays
+    and goes through the same pair core. ``context`` is required (a
+    ``ValueError`` otherwise). ``n_salt`` has no effect; it is kept so
+    existing callers keep working."""
+    if context is None:
+        raise ValueError("fuzzy_mention_edges needs a (url, mention) context")
+    named = mentions.where(F.length("norm") >= 2).select(
+        "mention", F.struct(F.col("mention").alias("id"), "norm").alias("name")
     )
-    blocked = m.withColumn("block", F.explode(F.array(sur_block, given_block)))
-    cand = (
-        _salted_block_pairs(blocked, n_salt)
-        .select(
-            F.col("a.mention").alias("src"),
-            F.col("a.norm").alias("na"),
-            F.col("b.mention").alias("dst"),
-            F.col("b.norm").alias("nb"),
-        )
-        .distinct()  # a pair sharing both blocks appears twice
+    docs = (
+        context.select("url", "mention")
+        .join(named, on="mention")
+        .groupBy("url")
+        .agg(F.collect_set("name").alias("names"))
     )
-    bga, bgb = _char_bigrams(F.col("na")), _char_bigrams(F.col("nb"))
-    jaccard = F.size(F.array_intersect(bga, bgb)) / F.size(F.array_union(bga, bgb))
-    containment = (
-        F.when(
-            F.length("na") > F.length("nb"), F.col("na").endswith(F.col("nb"))
-        )
-        .when(F.length("nb") > F.length("na"), F.col("nb").endswith(F.col("na")))
-        .otherwise(F.lit(False))
-    )
-    edges = cand.where((jaccard >= F.lit(theta)) | containment).select("src", "dst")
-    if context is not None:
-        ca = context.select(F.col("mention").alias("src"), "url")
-        cb = context.select(F.col("mention").alias("dst"), "url")
-        edges = (
-            edges.join(ca, on="src")
-            .join(cb, on=["dst", "url"])
-            .select("src", "dst")
-            .distinct()
-        )
-    return edges
+    return _doc_pair_edges(docs, theta).distinct()
 
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
@@ -274,36 +256,48 @@ def link_entities(
     n_salt: int = 1,
     use_context: bool = False,
 ) -> DataFrame:
-    """→ (mention, n_docs, norm, component) — the alias-resolution table;
-    ``component`` is the minimum norm of the mention's person.
+    """→ (mention, n_docs, norm, component) — the alias-resolution table.
 
-    ``fuzzy=False`` (the parity pipeline's default, same opt-in discipline
-    as ``coref_stage``): mentions link exactly when their norms are equal,
-    so ``component`` is the norm itself — a lazy frame, no Spark job.
+    Invariant (both paths): ``component`` is the minimum norm of the
+    mention's person, so ``build_nodes``/``build_edges`` use it as the
+    canonical name and hash it into the person id.
 
-    ``fuzzy=True`` adds the pairwise-similarity edges of
-    ``fuzzy_mention_edges`` (nickname/variant merging) between distinct
-    norms, runs connected components over the norm vertices, and returns
-    the table ``localCheckpoint``ed (``build_nodes``/``build_edges`` read it
-    three times). The similarity predicate depends only on the two norms,
-    so linking norms gives the same components as linking their mentions.
-    ``use_context=True`` additionally requires a fuzzy pair to co-occur in
-    at least one document: for two different norms, "some mention of each
-    shares a doc" — the mention-level guard up to the exact-norm links that
-    already join each norm's mentions."""
+    One ``expanded`` row is one document (url is the corpus key); its
+    ``ckip_entity`` array lists the document's person mentions.
+
+    ``fuzzy=False`` (the pipeline's default; fuzzy merges are opt-in so the
+    reference parity holds): mentions link exactly when their norms are
+    equal, so ``component`` is the norm itself — a lazy frame, no Spark job.
+
+    ``fuzzy=True`` also links two different norms (≥2 chars) that occur in
+    one document and pass ``_similar`` (shared surname or given-name block,
+    then bigram Jaccard ≥ ``theta`` or nickname containment). Each
+    document's distinct norms give its candidate pairs map-side; the one
+    shuffle between that scan and the component rounds is
+    ``_canonical_edges``' dedup.
+    Connected components run over the norm vertices, so the component is
+    the minimum norm; the table comes back ``localCheckpoint``ed
+    (``build_nodes``/``build_edges`` read it twice). The co-occurrence
+    guard is what makes per-document pairs complete, so ``use_context``
+    must be True with ``fuzzy=True`` (``ValueError`` otherwise). ``n_salt``
+    has no effect; it is kept so existing callers keep working."""
     mentions = mention_table(expanded)
     if not fuzzy:
         return mentions.withColumn("component", F.col("norm"))
-    norms = mentions.select(F.col("norm").alias("mention"), "norm").distinct()
-    context = None
-    if use_context:
-        context = (
-            expanded.select("url", F.explode("ckip_entity").alias("m"))
-            .select("url", normalize_mention(F.col("m")).alias("mention"))
-            .distinct()
+    if not use_context:
+        raise ValueError(
+            "fuzzy linking needs use_context=True: candidate pairs come from "
+            "the norms that co-occur in one document"
         )
-    edges = fuzzy_mention_edges(norms, theta=theta, n_salt=n_salt, context=context)
-    comps = connected_components(norms.select(F.col("norm").alias("id")), edges)
+    norms = F.filter(
+        F.array_distinct(F.transform("ckip_entity", normalize_mention)),
+        lambda n: F.length(n) >= 2,
+    )
+    docs = expanded.select(
+        F.transform(norms, lambda n: F.struct(n.alias("id"), n.alias("norm"))).alias("names")
+    )
+    vertices = mentions.select(F.col("norm").alias("id")).distinct()
+    comps = connected_components(vertices, _doc_pair_edges(docs, theta))
     return (
         mentions.join(comps.withColumnRenamed("id", "norm"), on="norm", how="left")
         .select("mention", "n_docs", "norm", "component")

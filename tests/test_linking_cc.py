@@ -60,13 +60,16 @@ def test_fuzzy_edges_nickname_merges_surname_sharers_do_not(spark):
     """Round-3 verdict item 3: 志玲 links to 林志玲 (bigram Jaccard 0.5 +
     suffix containment, found via the given-name block), while 陳大明/陳小華
     (same surname, bigram Jaccard 0) and 林大同 (same hot surname) stay
-    separate."""
+    separate, although every mention co-occurs in one document."""
     mentions = spark.createDataFrame(
         _FUZZY_MENTIONS, "mention string, norm string, n_docs long"
     )
+    context = spark.createDataFrame(
+        [("u1", m) for m, _, _ in _FUZZY_MENTIONS], "url string, mention string"
+    )
     edges = {
         tuple(sorted((r["src"], r["dst"])))
-        for r in fuzzy_mention_edges(mentions, theta=0.5).collect()
+        for r in fuzzy_mention_edges(mentions, theta=0.5, context=context).collect()
     }
     assert ("志玲", "林志玲") in edges
     assert ("志玲", "林志玲老師") in edges  # via equal-norm transitivity too
@@ -75,19 +78,20 @@ def test_fuzzy_edges_nickname_merges_surname_sharers_do_not(spark):
     assert not any("王建國" in e for e in edges)
 
 
-def test_fuzzy_edges_salted_path_matches_unsalted(spark):
-    """The salted off-diagonal self-join (hot-surname skew path) must produce
-    the IDENTICAL edge set as the plain block self-join."""
+def test_fuzzy_edges_need_context(spark):
+    """Fuzzy pairs come from documents: without a context (fuzzy
+    mention edges) or with ``use_context=False`` (fuzzy linking) there is
+    no candidate source, and both raise instead of falling back."""
     mentions = spark.createDataFrame(
         _FUZZY_MENTIONS, "mention string, norm string, n_docs long"
     )
-
-    def canon(df):
-        return {tuple(sorted((r["src"], r["dst"]))) for r in df.collect()}
-
-    plain = canon(fuzzy_mention_edges(mentions, theta=0.5, n_salt=1))
-    salted = canon(fuzzy_mention_edges(mentions, theta=0.5, n_salt=4))
-    assert plain == salted and plain  # identical and non-empty
+    with pytest.raises(ValueError, match="context"):
+        fuzzy_mention_edges(mentions)
+    expanded = spark.createDataFrame(
+        [("u1", ["林志玲", "志玲"])], "url string, ckip_entity array<string>"
+    )
+    with pytest.raises(ValueError, match="use_context"):
+        link_entities(expanded, fuzzy=True)
 
 
 def test_fuzzy_edges_context_guard(spark):
@@ -114,10 +118,6 @@ def test_link_entities_fuzzy_end_to_end(spark):
     """link_entities(fuzzy=True): nickname + title variants land in ONE
     component; the default (fuzzy=False) run on the same input keeps them
     apart — parity pipeline unaffected by the opt-in."""
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.linking import (
-        link_entities,
-    )
-
     expanded = spark.createDataFrame(
         [
             ("u1", ["林志玲", "志玲", "陳大明"]),
@@ -126,7 +126,10 @@ def test_link_entities_fuzzy_end_to_end(spark):
         ],
         "url string, ckip_entity array<string>",
     )
-    fz = {r["mention"]: r["component"] for r in link_entities(expanded, fuzzy=True, n_salt=3).collect()}
+    fz = {
+        r["mention"]: r["component"]
+        for r in link_entities(expanded, fuzzy=True, use_context=True).collect()
+    }
     assert fz["林志玲"] == fz["志玲"] == fz["林志玲老師"]
     assert fz["陳大明"] != fz["陳小華"]
     assert fz["陳大明"] != fz["林志玲"]
@@ -268,27 +271,92 @@ def test_exact_link_entities_runs_no_job(spark):
     }
 
 
-@pytest.mark.parametrize("seed,n_salt", [(7, 4), (11, 1)])
-def test_fuzzy_linking_nodes_edges_match_union_find(spark, seed, n_salt):
-    """Seeded open-vocabulary mentions (Taiwan surname shares, titled and
-    nickname aliases) → fuzzy linking with the context guard, on the salted
-    and the plain block self-join → build_nodes/build_edges, equal to the
-    plain-Python union-find."""
-    docs, triples = link_tables(seed=seed, n_docs=120, n_people=90)
+def _linked_sets(spark, docs, triples):
+    """Fuzzy linking with the context guard → build_nodes/build_edges, as
+    the (nodes, edges) sets ``link_oracle`` returns."""
     mentions = spark.createDataFrame(docs, "url string, ckip_entity array<string>")
     triple_df = spark.createDataFrame(triples, "url string, subj string, obj string, rel string")
-    linked = link_entities(mentions, fuzzy=True, use_context=True, n_salt=n_salt)
+    linked = link_entities(mentions, fuzzy=True, use_context=True)
     nodes = build_nodes(linked).collect()
     edges = build_edges(triple_df, linked, build_nodes(linked)).collect()
-
     canon = {r["person_id"]: r["canonical_name"] for r in nodes}
     got_nodes = {(r["canonical_name"], tuple(r["aliases"]), r["n_docs"]) for r in nodes}
     got_edges = {
         (canon[r["subj_id"]], canon[r["obj_id"]], r["rel"], r["n_docs"], tuple(r["example_urls"]))
         for r in edges
     }
-    want_nodes, want_edges = link_oracle(docs, triples)
-    assert got_nodes == want_nodes
-    assert got_edges == want_edges
+    return got_nodes, got_edges
+
+
+@pytest.mark.parametrize("seed", [7, 11])
+def test_fuzzy_linking_nodes_edges_match_union_find(spark, seed):
+    """Seeded open-vocabulary mentions (Taiwan surname shares, titled and
+    nickname aliases) → fuzzy linking with the context guard →
+    build_nodes/build_edges, equal to the plain-Python union-find."""
+    docs, triples = link_tables(seed=seed, n_docs=120, n_people=90)
+    want = link_oracle(docs, triples)
+    assert _linked_sets(spark, docs, triples) == want
     # the fixture must exercise fuzzy merges, not only exact-norm ones
-    assert any(len({norm_mention(a) for a in aliases}) > 1 for _, aliases, _ in want_nodes)
+    assert any(len({norm_mention(a) for a in aliases}) > 1 for _, aliases, _ in want[0])
+
+
+def test_fuzzy_linking_given_name_block_only(spark):
+    """Every fuzzy merge here shares only the given-name block (last two
+    characters), never the surname block: 志玲 ↔ 林志玲 and 歐陽建國 ↔
+    建國老師. 王志玲 shares that block with 林志玲 and a document with it,
+    but their bigram Jaccard is 1/3 and neither is the other's suffix, so it
+    stays apart."""
+    docs = [
+        ("u1", ["林志玲", "志玲", "陳大明"]),
+        ("u2", ["歐陽建國", "建國老師"]),
+        ("u3", ["王志玲", "陳大明"]),
+        ("u4", ["林志玲", "王志玲"]),
+    ]
+    triples = [
+        ("u1", "志玲", "陳大明", "朋友"),
+        ("u2", "建國老師", "歐陽建國", "師生"),
+        ("u4", "王志玲", "林志玲", "朋友"),
+    ]
+    want = link_oracle(docs, triples)
+    assert _linked_sets(spark, docs, triples) == want
+    merged = {aliases for _, aliases, _ in want[0] if len(aliases) > 1}
+    assert merged == {("志玲", "林志玲"), ("建國老師", "歐陽建國")}
+
+
+def test_fuzzy_linking_needs_a_shared_block(spark):
+    """甲乙丙丁戊己庚 / 辛乙丙丁戊己壬 co-occur and pass bigram Jaccard (4 of
+    8 bigrams = 0.5) but share neither the first character nor the last
+    two, so they must not link: the block test is part of the predicate."""
+    a, b = "甲乙丙丁戊己庚", "辛乙丙丁戊己壬"
+    expanded = spark.createDataFrame([("u1", [a, b])], "url string, ckip_entity array<string>")
+    comp = {
+        r["mention"]: r["component"]
+        for r in link_entities(expanded, fuzzy=True, use_context=True).collect()
+    }
+    assert comp == {a: a, b: b}
+
+
+def test_fuzzy_edges_reach_connected_components_without_a_shuffle(spark, monkeypatch):
+    """Fuzzy ``link_entities`` builds its similarity edges map-side from each
+    document's norms: the edge frame it hands to connected components plans
+    no join and no exchange (the one dedup shuffle is connected
+    components' own)."""
+    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators import (
+        linking,
+    )
+
+    seen = []
+    real = linking.connected_components
+
+    def capture(vertices, edges, *a, **k):
+        seen.append(edges)
+        return real(vertices, edges, *a, **k)
+
+    monkeypatch.setattr(linking, "connected_components", capture)
+    docs, _ = link_tables(seed=7, n_docs=40, n_people=30)
+    expanded = spark.createDataFrame(docs, "url string, ckip_entity array<string>")
+    linking.link_entities(expanded, fuzzy=True, use_context=True)
+    assert len(seen) == 1
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    assert "Exchange" not in plan, plan

@@ -22,7 +22,7 @@ def test_prefix_fits_driver_cap():
 
 def test_all_queries_present():
     # rotation must never drop a query (a disappeared query = regression)
-    assert len(entry_mod.queries()) == 76
+    assert len(entry_mod.queries()) == 74
 
 
 def test_queries_and_oracles_align():
