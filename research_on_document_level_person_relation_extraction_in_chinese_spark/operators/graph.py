@@ -45,6 +45,12 @@ def build_edges(triples: DataFrame, linked: DataFrame, nodes: DataFrame) -> Data
     side is measured small (the common sub-web-scale case), and falls back
     to a shuffled join otherwise. ``test_plans_explain`` asserts the plan
     carries no mandatory broadcast hint.
+
+    ``n_docs`` and ``example_urls`` both come from the edge's one sorted
+    url set, so the edge aggregation is a single exchange keyed on
+    ``(subj_id, obj_id, rel)``; a ``countDistinct`` beside it would add a
+    second aggregation keyed on ``url`` too, with its own exchange. A null
+    url is in neither.
     """
     resolve = linked.select("mention", F.xxhash64("component").alias("person_id"))
     resolved = (
@@ -55,11 +61,16 @@ def build_edges(triples: DataFrame, linked: DataFrame, nodes: DataFrame) -> Data
         .withColumn("subj_id", F.coalesce("subj_id", F.xxhash64("subj")))
         .withColumn("obj_id", F.coalesce("obj_id", F.xxhash64("obj")))
     )
+    urls = F.col("_urls")
     return (
         resolved.groupBy("subj_id", "obj_id", "rel")
-        .agg(
-            F.countDistinct("url").alias("n_docs"),
-            F.slice(F.sort_array(F.collect_set("url")), 1, 3).alias("example_urls"),
+        .agg(F.sort_array(F.collect_set("url")).alias("_urls"))
+        .select(
+            "subj_id",
+            "obj_id",
+            "rel",
+            F.size(urls).cast("bigint").alias("n_docs"),
+            F.slice(urls, 1, 3).alias("example_urls"),
         )
     )
 

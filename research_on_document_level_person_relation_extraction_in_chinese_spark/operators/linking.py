@@ -19,13 +19,16 @@ and filtered map-side; the surname and given-name blocks are a predicate on
 the pair, not a shuffle key, so no join follows the 陳/林/黃 surname skew and
 the candidate count grows with the documents, bounded by names per
 document. Each connected-components round pays one ``localCheckpoint``
-(cuts the growing lineage) and one exact star-forest test; an input that
-is already star-shaped pays no round at all.
+(cuts the growing lineage), one exact star-forest test and four
+exchanges: large-star and small-star each take the per-node minimum with a
+window (one exchange, no groupBy joined back) and deduplicate (another).
+An input that is already star-shaped pays no round at all.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..scorers.rules import TITLES
@@ -44,7 +47,10 @@ def mention_table(expanded: DataFrame) -> DataFrame:
     return (
         expanded.select("url", F.explode("ckip_entity").alias("mention"))
         .groupBy("mention")
-        .agg(F.countDistinct("url").alias("n_docs"))
+        # size(collect_set) rather than countDistinct: one aggregation keyed
+        # on the mention; countDistinct plans a second one keyed on
+        # (mention, url), with its own exchange. Both ignore null urls.
+        .agg(F.size(F.collect_set("url")).cast("bigint").alias("n_docs"))
         .withColumn("norm", normalize_mention(F.col("mention")))
     )
 
@@ -173,16 +179,17 @@ def _canonical_edges(edges: DataFrame) -> DataFrame:
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star: every node connects its strictly-larger neighbors to its
     minimum neighborhood label (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", op. large-star). Keeps the (src > dst) canon."""
+    MapReduce and Beyond", op. large-star). Keeps the (src > dst) canon.
+    The per-node minimum is a window over the node's edges, not a groupBy
+    joined back: one exchange fewer, and no join."""
     bidir = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    mins = bidir.groupBy("src").agg(F.min("dst").alias("_mn"))
-    m = F.least(F.col("_mn"), F.col("src"))
+    m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
     return (
-        bidir.join(mins, "src")
+        bidir.select("src", "dst", m.alias("_m"))
         .where(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), m.alias("dst"))
+        .select(F.col("dst").alias("src"), F.col("_m").alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -190,15 +197,21 @@ def _large_star(edges: DataFrame) -> DataFrame:
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Small-star: every node links all its smaller neighbors (and itself)
-    to the minimum of them. Input/output in (src > dst) canon."""
-    mins = edges.groupBy("src").agg(F.min("dst").alias("_mn"))
-    relink = (
-        edges.join(mins, "src")
-        .where(F.col("dst") != F.col("_mn"))
-        .select(F.col("dst").alias("src"), F.col("_mn").alias("dst"))
+    to the minimum of them. Input/output in (src > dst) canon. Each edge
+    emits (dst, min) and (src, min) through one explode; the self-loops
+    (dst = min) are dropped and the repeated (src, min) deduplicated."""
+    mn = F.col("_mn")
+    pairs = F.array(
+        F.struct(F.col("dst").alias("src"), mn.alias("dst")),
+        F.struct(F.col("src").alias("src"), mn.alias("dst")),
     )
-    self_link = mins.select("src", F.col("_mn").alias("dst"))
-    return relink.union(self_link).where(F.col("src") != F.col("dst")).distinct()
+    return (
+        edges.withColumn("_mn", F.min("dst").over(Window.partitionBy("src")))
+        .select(F.explode(pairs).alias("e"))
+        .select("e.src", "e.dst")
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
 
 
 def _is_star_forest(edges: DataFrame) -> bool:
@@ -218,11 +231,11 @@ def _is_star_forest(edges: DataFrame) -> bool:
     )
 
 
-def connected_components(vertices: DataFrame, edges: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Alternating large-star/small-star connected components over string
-    vertex ids → (id, component) where component = the component's minimum
-    id (Kiveris et al. — O(log n) rounds even on long chains, vs the
-    O(diameter) of plain min-label propagation).
+def _star_roots(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+    """Alternating large-star/small-star rounds over similarity ``edges``
+    (src, dst) → the star-forest roots (id, component), one row per vertex
+    that is NOT its component's minimum, component = that minimum. A vertex
+    with no row is its own component (isolated, or the minimum itself).
 
     Each round is ``localCheckpoint``ed to cut the growing lineage (SURVEY
     §4 custom item 2). The loop stops once the edges form a star forest
@@ -241,10 +254,20 @@ def connected_components(vertices: DataFrame, edges: DataFrame, max_iter: int = 
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         rounds += 1
     # star-forest edges: src (child) → dst (component root)
-    roots = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
+    return e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
+
+
+def connected_components(vertices: DataFrame, edges: DataFrame, max_iter: int = 25) -> DataFrame:
+    """Alternating large-star/small-star connected components over string
+    vertex ids → (id, component) for every row of ``vertices``, where
+    component = the component's minimum id (Kiveris et al. — O(log n)
+    rounds even on long chains, vs the O(diameter) of plain min-label
+    propagation). The rounds, their stop test and the ``max_iter`` error
+    are ``_star_roots``'; this left-joins the vertices to its roots, a
+    vertex with no root being its own component."""
     return (
         vertices.select("id")
-        .join(roots, "id", "left")
+        .join(_star_roots(edges, max_iter), "id", "left")
         .select("id", F.coalesce("component", "id").alias("component"))
     )
 
@@ -275,8 +298,10 @@ def link_entities(
     document's distinct norms give its candidate pairs map-side; the one
     shuffle between that scan and the component rounds is
     ``_canonical_edges``' dedup.
-    Connected components run over the norm vertices, so the component is
-    the minimum norm; the table comes back ``localCheckpoint``ed
+    The mentions are left-joined on their norm straight to the star-forest
+    roots of those edges (``_star_roots``; a norm with no root is its own
+    component), so the component is the minimum norm with no vertex
+    ``distinct`` and no second join; the table comes back ``localCheckpoint``ed
     (``build_nodes``/``build_edges`` read it twice). The co-occurrence
     guard is what makes per-document pairs complete, so ``use_context``
     must be True with ``fuzzy=True`` (``ValueError`` otherwise). ``n_salt``
@@ -296,10 +321,9 @@ def link_entities(
     docs = expanded.select(
         F.transform(norms, lambda n: F.struct(n.alias("id"), n.alias("norm"))).alias("names")
     )
-    vertices = mentions.select(F.col("norm").alias("id")).distinct()
-    comps = connected_components(vertices, _doc_pair_edges(docs, theta))
+    roots = _star_roots(_doc_pair_edges(docs, theta)).withColumnRenamed("id", "norm")
     return (
-        mentions.join(comps.withColumnRenamed("id", "norm"), on="norm", how="left")
-        .select("mention", "n_docs", "norm", "component")
+        mentions.join(roots, on="norm", how="left")
+        .select("mention", "n_docs", "norm", F.coalesce("component", "norm").alias("component"))
         .localCheckpoint(eager=True)
     )

@@ -101,9 +101,12 @@ def run_pipeline(
 ) -> dict:
     """Full run incl. linking + graph; returns stage DataFrames + metrics.
 
-    With ``catalog``: each listed stage is materialized once (plain parquet
-    + manifest with lineage/counters); a re-run with ``resume=True`` reads
-    completed stages instead of recomputing.
+    With ``catalog``: each stage, through ``triples``/``nodes``/``edges``, is
+    materialized once (plain parquet + manifest with lineage/counters); a
+    re-run with ``resume=True`` reads a completed stage instead of
+    recomputing it when every input snapshot its manifest records is still
+    that input's current one, so a recomputed stage forces new snapshots of
+    every stage downstream of it.
     ``with_replay`` adds entry point C (per-pair RE replay) as a further
     checkpointable stage over the expanded frame.
     """
@@ -112,7 +115,7 @@ def run_pipeline(
     def checkpoint(name: str, df_fn, inputs: list[str], metric_fn=None) -> DataFrame:
         if catalog is None:
             return df_fn()
-        if resume and catalog.has_stage(name):
+        if resume and catalog.is_current(name, inputs):
             return catalog.read_stage(spark, name)
         df = df_fn()
         if with_metrics and metric_fn:
@@ -203,14 +206,10 @@ def run_pipeline(
         )
     )
 
-    triples = triples_from_expanded(expanded)
+    triples = checkpoint("triples", lambda: triples_from_expanded(expanded), ["expanded"])
     linked = link_entities(expanded)
-    nodes = build_nodes(linked)
-    edges = build_edges(triples, linked, nodes)
-    if catalog is not None:
-        catalog.write_stage(triples, "triples", inputs=["expanded"])
-        catalog.write_stage(nodes, "nodes", inputs=["expanded"])
-        catalog.write_stage(edges, "edges", inputs=["expanded"])
+    nodes = checkpoint("nodes", lambda: build_nodes(linked), ["expanded"])
+    edges = checkpoint("edges", lambda: build_edges(triples, linked, nodes), ["expanded"])
 
     result = {
         "annotated": parsed,

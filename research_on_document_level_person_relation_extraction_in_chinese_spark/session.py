@@ -37,15 +37,11 @@ def get_spark(
         # test scale, split skewed joins (hot Chinese surnames) at 100 TB.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # never coalesce below the session's parallelism: the default 1 MiB
-        # floor assumes IO-bound work, but compute-bound stages over FEW
-        # bytes (e.g. the LSH candidate-verify joins: ~1 MiB of pair keys
-        # driving heavy probe work) get collapsed to 1-2 tasks and serialize
-        # — measured 86.7 s → 36.4 s on the 60k-doc dedup job at local[8].
-        # With the floor at 1 byte, AQE's parallelism-first rule targets
-        # totalBytes/parallelism, so small shuffles still coalesce but never
-        # under-use the cluster.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
+        # minPartitionSize keeps Spark's 1 MiB default, so AQE reads a
+        # KB-sized shuffle as one task. No KG stage does compute-heavy work
+        # behind a shuffle (the parsing step and the fuzzy pair build run
+        # map-side over file scans); a lower floor would only spread each
+        # small reduce stage over ~parallelism tasks of fixed cost.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # broadcast decisions from MEASURED sizes only. Catalyst's static
         # size propagation does not scale estimates through Generate

@@ -69,6 +69,25 @@ class StageCatalog:
             return False
         return os.path.exists(os.path.join(self._data_dir(name), "_SUCCESS"))
 
+    def is_current(self, name: str, inputs: list[str]) -> bool:
+        """True when the stage is committed and every input snapshot its
+        manifest records is still that input's current snapshot (an input
+        with no manifest, such as the raw source, records ``None``)."""
+        return (
+            self.has_stage(name)
+            and self.manifest(name)["inputs"] == self._current_snapshots(inputs)
+        )
+
+    def _current_snapshots(self, names: list[str]) -> dict:
+        """{name: current snapshot id, or None for a stage with no manifest}."""
+        ids = {}
+        for name in names:
+            try:
+                ids[name] = self.manifest(name)["snapshot_id"]
+            except FileNotFoundError:
+                ids[name] = None
+        return ids
+
     def _data_dir(self, name: str, as_of: str | None = None) -> str:
         """Resolve a stage's data directory: the requested snapshot from the
         chain, else the CURRENT manifest's dir, else the flat path
@@ -129,18 +148,11 @@ class StageCatalog:
         data_dir: str | None = None,
     ) -> str:
         snapshot_id = snapshot_id or uuid.uuid4().hex[:16]
-        parents = {}
-        for inp in inputs or []:
-            try:
-                with open(self._manifest_path(inp), encoding="utf-8") as f:
-                    parents[inp] = json.load(f)["snapshot_id"]
-            except FileNotFoundError:
-                parents[inp] = None
         manifest = {
             "stage": name,
             "snapshot_id": snapshot_id,
             "created_at": time.time(),
-            "inputs": parents,
+            "inputs": self._current_snapshots(inputs or []),
             "metrics": metrics or {},
             "schema": schema_json,
             "data_dir": data_dir or self._path(name),

@@ -1,8 +1,12 @@
 """Entity-linking internals: blocking, similarity edges, connected components,
 and fuzzy linking end to end against a Python union-find."""
 
+import random
+import re
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from perfbench.inputs import link_oracle, link_tables, norm_mention
 from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.graph import (
@@ -14,6 +18,7 @@ from research_on_document_level_person_relation_extraction_in_chinese_spark.oper
     fuzzy_mention_edges,
     link_entities,
     mention_edges,
+    mention_table,
     normalize_mention,
 )
 
@@ -247,6 +252,85 @@ def test_connected_components_matches_union_find(spark, edges, is_star):
     assert {r["id"]: r["component"] for r in comp.collect()} == want
 
 
+def _random_graph(seed, n):
+    """A seeded graph over ``n`` vertices with random labels (so no walk
+    along a chain meets the ids in order): a chain over a third to a half of
+    the vertices, a star, random edges among the rest, then reversed
+    copies, duplicates and self-loops."""
+    rng = random.Random(seed)
+    ids = [f"v{x:03d}" for x in rng.sample(range(1000), n)]
+    rest = ids[:]
+    rng.shuffle(rest)
+    k = rng.randint(n // 3, n // 2)
+    chain, rest = rest[:k], rest[k:]
+    edges = list(zip(chain, chain[1:]))
+    s = rng.randint(5, 10)
+    star, rest = rest[:s], rest[s:]
+    edges += [(star[0], v) for v in star[1:]]
+    edges += [(rng.choice(rest), rng.choice(rest)) for _ in range(len(rest) // 2)]
+    edges += [(b, a) for a, b in rng.sample(edges, 5)]
+    edges += rng.sample(edges, 5)
+    edges += [(v, v) for v in rng.sample(ids, 3)]
+    rng.shuffle(edges)
+    return ids, edges
+
+
+def test_connected_components_random_graphs_match_union_find(spark, monkeypatch):
+    """Six seeded random graphs of 30 to 80 vertices (chains, stars,
+    duplicates, reversed edges, self-loops): the labels equal the Python
+    union-find, and the chains make at least one graph run two or more
+    large-star/small-star rounds."""
+    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators import (
+        linking,
+    )
+
+    rounds = []
+    real = linking._small_star
+
+    def counted(edges):
+        rounds[-1] += 1
+        return real(edges)
+
+    monkeypatch.setattr(linking, "_small_star", counted)
+    for seed, n in zip(range(6), (30, 40, 50, 60, 70, 80)):
+        ids, edges = _random_graph(seed, n)
+        vertices = spark.createDataFrame([(i,) for i in ids], "id string")
+        edge_df = spark.createDataFrame(edges, "src string, dst string")
+        rounds.append(0)
+        comp = connected_components(vertices, edge_df)
+        got = {r["id"]: r["component"] for r in comp.collect()}
+        assert got == _union_find(ids, edges), f"graph seed {seed}"
+    assert max(rounds) >= 2, rounds
+
+
+def _url_keyed_exchanges(df):
+    """Hash exchanges of ``df``'s executed plan whose keys include url."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        line
+        for line in plan.splitlines()
+        if "Exchange hashpartitioning(" in line and re.search(r"\burl#", line)
+    ]
+
+
+def test_doc_counts_shuffle_once_and_stay_long(spark):
+    """``n_docs`` is the size of one url set per key: neither the mention
+    table nor the edge aggregation plans an exchange keyed on url (as a
+    ``countDistinct`` does), and ``n_docs`` stays a bigint in the mention
+    table, the fuzzy alias table and the edges."""
+    docs, triples = link_tables(seed=7, n_docs=40, n_people=30)
+    expanded = spark.createDataFrame(docs, "url string, ckip_entity array<string>")
+    triple_df = spark.createDataFrame(triples, "url string, subj string, obj string, rel string")
+    mentions = mention_table(expanded)
+    fuzzy = link_entities(expanded, fuzzy=True, use_context=True)
+    edges = build_edges(triple_df, fuzzy, build_nodes(fuzzy))
+    assert _url_keyed_exchanges(mentions) == []
+    assert _url_keyed_exchanges(edges) == []
+    for df in (mentions, fuzzy, edges):
+        assert df.schema["n_docs"].dataType == LongType()
+
+
 def test_exact_link_entities_runs_no_job(spark):
     """The default (exact) path links mentions by their norm: building the
     table launches no Spark job, and every component is the mention's norm."""
@@ -338,21 +422,21 @@ def test_fuzzy_linking_needs_a_shared_block(spark):
 
 def test_fuzzy_edges_reach_connected_components_without_a_shuffle(spark, monkeypatch):
     """Fuzzy ``link_entities`` builds its similarity edges map-side from each
-    document's norms: the edge frame it hands to connected components plans
-    no join and no exchange (the one dedup shuffle is connected
-    components' own)."""
+    document's norms: the edge frame it hands to the star-forest rounds
+    (``_star_roots``) plans no join and no exchange (the one dedup shuffle
+    is the rounds' own)."""
     from research_on_document_level_person_relation_extraction_in_chinese_spark.operators import (
         linking,
     )
 
     seen = []
-    real = linking.connected_components
+    real = linking._star_roots
 
-    def capture(vertices, edges, *a, **k):
+    def capture(edges, *a, **k):
         seen.append(edges)
-        return real(vertices, edges, *a, **k)
+        return real(edges, *a, **k)
 
-    monkeypatch.setattr(linking, "connected_components", capture)
+    monkeypatch.setattr(linking, "_star_roots", capture)
     docs, _ = link_tables(seed=7, n_docs=40, n_people=30)
     expanded = spark.createDataFrame(docs, "url string, ckip_entity array<string>")
     linking.link_entities(expanded, fuzzy=True, use_context=True)

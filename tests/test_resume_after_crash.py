@@ -43,6 +43,29 @@ def test_resume_recomputes_only_missing_stage(spark, tmp_path):
     assert cat.lineage("expanded")["inputs"][0]["snapshot_id"] == cat.manifest(
         "consensus"
     )["snapshot_id"]
+    # a new expanded snapshot forces new triples over it
+    assert cat.lineage("triples")["inputs"][0]["snapshot_id"] == cat.manifest(
+        "expanded"
+    )["snapshot_id"]
+
+
+def test_resume_over_complete_catalog_commits_nothing(spark, tmp_path):
+    """A resume over a complete catalog reuses every stage, through
+    triples, nodes and edges: each stage keeps one snapshot, and the
+    resumed outputs equal the catalog-free run."""
+    docs = generate_corpus(spark, 60, seed=42).cache()
+
+    def outputs(res):
+        return {k: sorted(map(tuple, res[k].collect())) for k in ("triples", "nodes", "edges")}
+
+    expected = outputs(run_pipeline(spark, docs, catalog=None, with_metrics=False))
+    assert expected["triples"] and expected["nodes"] and expected["edges"]
+    cat = StageCatalog(str(tmp_path / "stages"))
+    run_pipeline(spark, docs, catalog=cat, with_metrics=False)
+    resumed = run_pipeline(spark, docs, catalog=cat, resume=True, with_metrics=False)
+    assert outputs(resumed) == expected
+    stages = ("annotated", "consensus", "expanded", "triples", "nodes", "edges")
+    assert {name: len(cat.snapshots(name)) for name in stages} == dict.fromkeys(stages, 1)
 
 
 def test_document_level_resume_filter(spark, tmp_path):
