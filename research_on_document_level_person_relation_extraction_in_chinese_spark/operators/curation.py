@@ -346,8 +346,9 @@ def bloom_decontaminate(
     # Each consumer hoists the word array to its own projection (split once
     # per doc, not once per gram position — see word_ngrams_from_words);
     # the PERSISTED schema stays (id, text, n_maybe) — caching the word
-    # array would pay nested-array decode per consumer (the r6 semdedup
-    # finding) for a flagged-set recompute that is benchmark-bounded anyway.
+    # array would pay nested-array decode per consumer (measured slower than
+    # recomputing for cached array columns) for a flagged-set recompute that
+    # is benchmark-bounded anyway.
     base = persist_scan(
         train.select(
             F.col(id_col), F.col(text_col), split_words(F.col(text_col)).alias("_w")

@@ -572,6 +572,22 @@ def simhash_duplicate_groups(
     )
 
 
+def banded_candidates(base: DataFrame, bands: int) -> DataFrame:
+    """Distinct candidate pairs colliding in at least one band (the
+    OR-amplification union); ``base`` carries id + bk0..bk{bands-1}."""
+    cand = None
+    for b in range(bands):
+        a_side = base.select(F.col("id").alias("a_id"), F.col(f"bk{b}").alias("bk"))
+        b_side = base.select(F.col("id").alias("b_id"), F.col(f"bk{b}").alias("bk"))
+        pairs = (
+            a_side.join(b_side, "bk")
+            .where(F.col("a_id") < F.col("b_id"))
+            .select("a_id", "b_id")
+        )
+        cand = pairs if cand is None else cand.unionByName(pairs)
+    return cand.distinct()
+
+
 def simhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -614,8 +630,6 @@ def simhash_near_dup_pairs(
             for b in range(bands)
         ],
     )
-    from .simsearch import banded_candidates
-
     cand = banded_candidates(base, bands)
     joined = (
         cand.join(sims.withColumnRenamed("id", "a_id").withColumnRenamed("h", "ha"), "a_id")

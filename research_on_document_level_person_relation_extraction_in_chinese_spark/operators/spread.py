@@ -23,8 +23,7 @@ partitioning-independent: aggregates, joins, folds).
 NOT applied where measured neutral-or-negative (the exchange outweighs the
 parallelism when the heavy pass is already behind a shuffle or carries
 array payloads): countmin_audit (+12%), bloom_decontaminate (+4%),
-embedding_near_dups (+14%), ann_banded_near_dups (+13%), embedding_topk
-(+11%), domain_cap (+83%), url_canonicalize (+8%).
+domain_cap (+83%), url_canonicalize (+8%).
 """
 
 from __future__ import annotations

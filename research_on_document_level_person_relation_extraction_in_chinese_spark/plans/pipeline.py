@@ -8,13 +8,17 @@ docs(url, warc_ts, html, text, lang)
 Everything up to entity linking is narrow (zero shuffles — one scan and ONE
 ``mapInArrow`` crossing per zh document that runs the whole per-document
 step chain, ``operators/steps.py``); the only wide operations in the whole
-plan are the triples distinct, the linking self-join, and the final graph
-groupBys. That is what makes the plan scale linearly with corpus size.
+plan are the triples distinct, the mention-table groupBy, and the graph
+groupBys and mention-resolution joins. Fuzzy linking adds its edge dedup,
+the connected-components rounds and the mention→root join; its candidate
+pairs are built map-side within each document. That is what makes the
+plan scale linearly with corpus size.
 
-With a ``StageCatalog`` the annotated/consensus/expanded stage tables are
-checkpointed with lineage manifests + counters and a re-run resumes from the
-last complete stage (the reference's per-stage CSV rewrite, done right).
-Each stage is then one job with one crossing over the previous stage table.
+With a ``StageCatalog`` the annotated/consensus/expanded/triples/nodes/edges
+stage tables are checkpointed with lineage manifests + counters, and a
+re-run reuses every stage whose recorded input snapshots are still current
+(the reference's per-stage CSV rewrite, done right). Each extraction stage
+is then one job with one crossing over the previous stage table.
 """
 
 from __future__ import annotations

@@ -34,7 +34,9 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: runtime re-plan — coalesce small post-shuffle partitions at
-        # test scale, split skewed joins (hot Chinese surnames) at 100 TB.
+        # test scale, split skewed joins at 100 TB: build_edges joins the
+        # triples to the mention table on the subject and object names, so
+        # a much-mentioned person is a hot key on the triples side.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # minPartitionSize keeps Spark's 1 MiB default, so AQE reads a

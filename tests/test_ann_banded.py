@@ -1,23 +1,8 @@
-"""Banded random-hyperplane ANN (OR-amplification): sub-quadratic candidate
-volume, exact precision (candidates verified by true cosine), certain recall
-on planted near-duplicates, and threshold-derived MinHash banding."""
-
-import math
-
-import pytest
-from pyspark.sql import functions as F
+"""Threshold-derived MinHash banding (``dedup.lsh_params``)."""
 
 from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.dedup import (
     lsh_params,
 )
-from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.simsearch import (
-    banded_base,
-    banded_candidates,
-    banded_near_dup_pairs,
-    random_hyperplanes,
-)
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_lsh_params_curve():
@@ -27,57 +12,3 @@ def test_lsh_params_curve():
     b_loose, _ = lsh_params(0.2, 8)
     b_tight, _ = lsh_params(0.95, 8)
     assert b_loose > b_tight
-
-
-def test_hyperplanes_deterministic():
-    a = random_hyperplanes(4, 8, "ann")
-    b = random_hyperplanes(4, 8, "ann")
-    c = random_hyperplanes(4, 8, "other")
-    assert a == b and a != c
-    assert all(-1.0 <= v <= 1.0 for row in a for v in row)
-
-
-def test_candidates_subquadratic(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    n = emb.count()
-    base = banded_base(emb, n_planes=16, bands=4, seed="ann")
-    n_cand = banded_candidates(base, 4).count()
-    all_pairs = n * (n - 1) // 2
-    # 16 buckets/band × 4 bands over random vectors → a small fraction of
-    # the quadratic pair space reaches the verify step
-    assert n_cand < 0.5 * all_pairs, (n_cand, all_pairs)
-    # more planes ⇒ even fewer candidates (the scale knob)
-    base24 = banded_base(emb, n_planes=24, bands=4, seed="ann")
-    n_cand24 = banded_candidates(base24, 4).count()
-    assert n_cand24 < n_cand
-
-
-def test_planted_near_dups_recalled(spark):
-    """Planted near-identical vectors (cosine ≈ 1) collide in essentially
-    every band — recall 1.0 on true near-duplicates."""
-    import struct
-
-    def vec(seed: int, flip: float = 0.0):
-        out = []
-        for d in range(64):
-            h = hash((seed, d)) % 2001 - 1000
-            out.append(h / 1000.0 + (flip if d == 0 else 0.0))
-        return out
-
-    rows = []
-    for i in range(30):
-        rows.append((i, vec(i)))
-        rows.append((100 + i, vec(i, flip=0.01)))  # near-dup twin
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    out = banded_near_dup_pairs(emb, threshold=0.99, n_planes=16, bands=4)
-    found = {(r["a_id"], r["b_id"]) for r in out.collect()}
-    assert {(i, 100 + i) for i in range(30)} <= found
-
-
-def test_precision_exact_vs_brute(spark):
-    """Every emitted pair genuinely clears the cosine threshold (the verify
-    step is exact — LSH affects recall only)."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = banded_near_dup_pairs(emb, threshold=0.4, n_planes=16, bands=4).collect()
-    assert len(out) > 0
-    assert all(r["cosine"] >= 0.4 for r in out)

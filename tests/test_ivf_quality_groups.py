@@ -1,81 +1,17 @@
-"""Round-3 additions: IVF ANN, Gopher-style repetition quality features,
-near-dup group resolution (pairs → connected components → canonical doc).
+"""Gopher-style repetition quality features and near-dup group resolution
+(pairs → connected components → canonical doc).
 
 Each operator also has a full value-level DuckDB oracle in
-``__spark_entry__.py`` (ivf_topk / gopher_quality / dedup_groups); the tests
+``__spark_entry__.py`` (gopher_quality / dedup_groups); the tests
 here pin the kernel semantics on hand-computed fixtures the oracle can't
 express independence from."""
-
-import hashlib
-
-from pyspark.sql import functions as F
 
 from research_on_document_level_person_relation_extraction_in_chinese_spark.operators import (
     dedup as D,
 )
 from research_on_document_level_person_relation_extraction_in_chinese_spark.operators import (
-    simsearch as S,
-)
-from research_on_document_level_person_relation_extraction_in_chinese_spark.operators import (
     textstats as T,
 )
-
-
-def _dvecs(n, dim=8):
-    """Deterministic pseudo-random vectors (md5-derived, no RNG state)."""
-    out = []
-    for i in range(n):
-        v = []
-        for d in range(dim):
-            h = int(hashlib.md5(f"ivf:{i}:{d}".encode()).hexdigest()[:8], 16)
-            v.append((h % 2001 - 1000) / 1000.0)
-        out.append((i, v))
-    return out
-
-
-def test_ivf_assign_matches_numpy_argmax(spark):
-    import numpy as np
-
-    rows = _dvecs(60)
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = S.ivf_centroids(emb, n_centroids=8)
-    got = {
-        r["vec_id"]: r["cluster"]
-        for r in S.ivf_assign(emb, cents).select("vec_id", "cluster").collect()
-    }
-    mat = np.array([v for _, v in rows])
-    cmat = np.array([cv for _, cv in cents])
-    sims = (mat @ cmat.T) / (
-        np.linalg.norm(mat, axis=1)[:, None] * np.linalg.norm(cmat, axis=1)[None, :]
-    )
-    want = {i: int(sims[i].argmax()) for i, _ in rows}
-    assert got == want
-
-
-def test_ivf_full_probe_equals_brute_force(spark):
-    rows = _dvecs(60)
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    q = rows[3][1]
-    brute = [r["vec_id"] for r in S.cosine_topk(emb, q, k=5).collect()]
-    # probing every cluster makes IVF exact
-    ivf = [
-        r["vec_id"]
-        for r in S.ivf_topk(emb, q, k=5, n_centroids=8, nprobe=8).collect()
-    ]
-    assert ivf == brute
-
-
-def test_ivf_probe_restricts_scan(spark):
-    rows = _dvecs(60)
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = S.ivf_centroids(emb, n_centroids=8)
-    assigned = S.ivf_assign(emb, cents)
-    sizes = {r["cluster"]: r["n"] for r in assigned.groupBy("cluster").agg(F.count("*").alias("n")).collect()}
-    # every returned hit must come from a probed cluster (nprobe=2 of 8)
-    out = S.ivf_topk(emb, rows[0][1], k=60, n_centroids=8, nprobe=2)
-    hit_clusters = {r["cluster"] for r in out.collect()}
-    assert len(hit_clusters) <= 2
-    assert sum(sizes.values()) == 60  # every vector assigned exactly once
 
 
 def test_repetition_features_hand_computed(spark):

@@ -20,13 +20,11 @@ KEEP = {"plans.reference_port", "operators.evaluate", "operators.snapshot", "pla
 #: reached only through ``__spark_entry__.py``; shrinks as the registry does
 REGISTRY_ONLY = {
     "functions.urls",
-    "operators.coref",
     "operators.curation",
     "operators.dedup",
     "operators.dsir",
     "operators.persistpool",
     "operators.quantiles",
-    "operators.simsearch",
     "operators.sketches",
     "operators.spread",
     "operators.textstats",

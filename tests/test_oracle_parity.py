@@ -13,7 +13,7 @@ import __spark_entry__ as entry_mod
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+    "orders", "lineitem", "events", "documents",
 ]
 
 ORACLES = entry_mod.oracle_sql()

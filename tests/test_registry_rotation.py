@@ -1,13 +1,12 @@
-"""Registry-rotation arithmetic guard (round-5 advice: the r5 prefix
-silently held 52 entries, so its last two never got a driver row). The
-driver's correctness battery samples the FIRST ``DRIVER_PREFIX_LEN``
-``queries()`` keys; the docstring tiers before the slot-51 marker must
-actually fit the cap."""
+"""Registry-order guard. The correctness battery samples the FIRST
+``DRIVER_PREFIX_LEN`` ``queries()`` keys; the intended prefix, which ends
+at ``_LAST_PREFIX_ENTRY``, must fit that cap, or its last entries get no
+battery row."""
 
 import __spark_entry__ as entry_mod
 
-#: the last entry of the round-6 driver prefix (tier B's final item); keep
-#: in sync with the queries() tier comments when rotating.
+#: the last entry of the sampled prefix; keep in sync with the
+#: ``queries()`` section comments when reordering.
 _LAST_PREFIX_ENTRY = "grouped_median"
 
 
@@ -22,7 +21,7 @@ def test_prefix_fits_driver_cap():
 
 def test_all_queries_present():
     # rotation must never drop a query (a disappeared query = regression)
-    assert len(entry_mod.queries()) == 74
+    assert len(entry_mod.queries()) == 66
 
 
 def test_queries_and_oracles_align():
