@@ -31,7 +31,6 @@ HASH_MOD = 1_000_000_007
 #: consumer (measured: 5 back-to-back scan stages dominating the LSH job,
 #: 62.7 s → 31.4 s once cached). At most one call's blocks stay cached; the
 #: next call evicts them.
-from .persistpool import persist_extra as _persist_extra  # noqa: E402
 from .persistpool import persist_scan as _persist_scan  # noqa: E402
 
 

@@ -5,8 +5,14 @@ Packages the engine for cluster submission and runs the full KG pipeline
 with stage checkpoints + lineage under ``--out``:
 
     zip -r /tmp/engine.zip research_on_document_level_person_relation_extraction_in_chinese_spark
-    spark-submit --py-files /tmp/engine.zip scripts/run_pipeline.py \
-        --docs 4000 --out /tmp/kg_run --seed 42
+    spark-submit --py-files /tmp/engine.zip \
+        --driver-java-options "-XX:ReservedCodeCacheSize=1g -Xmn256m" \
+        scripts/run_pipeline.py --docs 4000 --out /tmp/kg_run --seed 42
+
+The session here is built by spark-submit, not by ``get_spark``, so the
+driver JVM flags of ``session.py`` (the code cache and the young-generation
+bound) apply only when passed as ``--driver-java-options``; executors keep
+the cluster's defaults.
 
 On a real cluster, point ``--input`` at the web_pages Iceberg/parquet table
 instead of generating a synthetic corpus.
