@@ -62,7 +62,7 @@ def _pipeline_graph(spark: SparkSession) -> dict:
                 except Exception:
                     pass
         corpus = generate_corpus(spark, 600, seed=42)
-        res = run_pipeline(spark, corpus, catalog=None, with_metrics=False)
+        res = run_pipeline(spark, corpus, catalog=None)
         nodes = res["nodes"].persist()
         edges = res["edges"].persist()
         nodes.count(), edges.count()

@@ -23,8 +23,9 @@ Spark shape: steps 1–6 for ALL requested sources are ONE per-document step
 (``expand_step``) of the extraction chain, run inside the chain's single
 ``mapInArrow`` crossing (``operators/steps.py``). Per-doc pair generation
 stays bounded by the F10 caps (≤105 pairs per source, so no quadratic
-self-join is ever needed). The step drops a doc whose ``consensus_label``
-is empty — the reference's expansion gate.
+self-join is ever needed). A doc with an empty ``consensus_label`` gets
+null expansion columns; ``plans/pipeline.py:expanded_frame`` drops it (the
+reference's expansion gate).
 """
 
 from __future__ import annotations
@@ -156,16 +157,21 @@ def _merge(consensus_label, trad_text, density, ternary) -> tuple[list, list]:
 def expand_step(sources: tuple[str, ...] = ("ckip",)) -> Step:
     """Adds per requested source: entity list, density, extra_pairs,
     expansion_ternary, expansion_failed, merge label + _1024 variant
-    (column names per ``_FIELDS_BY_SOURCE``), plus ``trad_text``."""
+    (column names per ``_FIELDS_BY_SOURCE``), plus ``trad_text``; all null
+    for a doc with an empty ``consensus_label``."""
     for src in sources:
         if src not in NER_SOURCES:
             raise ValueError(f"unknown NER source {src!r}; have {NER_SOURCES}")
 
     fields = _expand_fields(sources)
+    merges = [_FIELDS_BY_SOURCE[src][5] for src in sources]
+    merge_cols = [c for m in merges for c in (m, f"{m}_1024")]
+    emits = (*fields, *(StructField(c, TERNARY_DT) for c in merge_cols))
+    not_expanded = (None,) * len(emits)
 
     def expand(text, g_trad, p_trad, consensus_label):
         if not consensus_label:
-            return None
+            return not_expanded
         row = _expand_one(deterministic, text, g_trad, p_trad, sources)
         out = [row[f.name] for f in fields]
         for src in sources:
@@ -173,9 +179,6 @@ def expand_step(sources: tuple[str, ...] = ("ckip",)) -> Step:
             out += _merge(consensus_label, row["trad_text"], row[den], row[tern])
         return out
 
-    merges = [_FIELDS_BY_SOURCE[src][5] for src in sources]
-    merge_cols = [c for m in merges for c in (m, f"{m}_1024")]
-    emits = (*fields, *(StructField(c, TERNARY_DT) for c in merge_cols))
     reads = ("text", "gemini_ternary_trad", "gpt_ternary_trad", "consensus_label")
     return Step("expand", reads, emits, expand)
 
@@ -184,6 +187,8 @@ def expansion_stage(
     consensus_df: DataFrame,
     ner_sources: tuple[str, ...] = ("ckip",),
 ) -> DataFrame:
-    """Input: consensus stage output; docs with an empty ``consensus_label``
-    are dropped (reference ``ckip_expansion.py:238-239``)."""
+    """Input: consensus stage output; a doc with an empty ``consensus_label``
+    is kept with null expansion columns (``plans/pipeline.py:expanded_frame``
+    applies the reference's gate, ``ckip_expansion.py:238-239``, as a filter
+    above the crossing)."""
     return run_steps(consensus_df, [expand_step(tuple(ner_sources))])

@@ -1,10 +1,11 @@
 """Per-document Python steps, chained inside one ``mapInArrow`` crossing.
 
 A step is plain Python over one document: it reads some of the document's
-columns and returns its new column values, or ``None`` to drop the
-document. ``run_steps`` runs a list of steps inside ONE ``mapInArrow``, so
-a chain of stages (annotate → remap → consensus → expand) crosses into
-Python once per document, on one worker per task.
+columns and returns its new column values; no step drops a document (a
+filter goes above the crossing, see below). ``run_steps`` runs a list of
+steps inside ONE ``mapInArrow``, so a chain of stages (annotate → remap →
+consensus → expand) crosses into Python once per document, on one worker
+per task.
 
 Why ``mapInArrow`` and not struct-returning pandas UDFs: a filter over a
 UDF's output (``size(consensus_label) > 0``) is pushed below the projection
@@ -13,10 +14,9 @@ pushed filter, so every Python node runs twice. A ``mapInArrow`` relation
 is opaque to the optimizer: a filter over it stays above it.
 
 Only the columns the steps read are converted to Python objects. Every
-other input column passes through as the Arrow array it arrived as (taken
-to the surviving rows when a step drops documents). An emitted column
-replaces the input column of the same name in place; new columns are
-appended in emission order.
+other input column passes through as the Arrow array it arrived as. An
+emitted column replaces the input column of the same name in place; new
+columns are appended in emission order.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from pyspark.sql.types import StructField, StructType
 
 @dataclass(frozen=True)
 class Step:
-    """``fn(*values of reads) -> tuple of emits | None`` per document;
+    """``fn(*values of reads) -> tuple of emits`` per document;
     ``prepare(*columns of reads)`` (optional) runs once per Arrow batch
     before ``fn``, over the batch's read columns as Python lists."""
 
@@ -70,31 +70,19 @@ def run_steps(df: DataFrame, steps: Sequence[Step]) -> DataFrame:
 
         for batch in batches:
             cols = {c: batch.column(c).to_pylist() for c in converted}
-            rows = None  # surviving input row indices, None = all
             for step in steps:
                 args = [cols[c] for c in step.reads]
                 if step.prepare is not None:
                     step.prepare(*args)
                 outs: list[list] = [[] for _ in step.emits]
-                kept: list[int] = []
-                n_in = len(args[0])
-                for i, vals in enumerate(zip(*args)):
-                    res = step.fn(*vals)
-                    if res is not None:
-                        kept.append(i)
-                        for out, v in zip(outs, res):
-                            out.append(v)
-                if len(kept) < n_in:
-                    cols = {c: [v[i] for i in kept] for c, v in cols.items()}
-                    rows = kept if rows is None else [rows[i] for i in kept]
+                for vals in zip(*args):
+                    for out, v in zip(outs, step.fn(*vals)):
+                        out.append(v)
                 cols.update(zip((f.name for f in step.emits), outs))
-            arrays = []
-            for name, afield in zip(out_names, arrow_schema):
-                if name in emitted:
-                    arrays.append(pa.array(cols[name], type=afield.type))
-                else:
-                    col = batch.column(name)
-                    arrays.append(col if rows is None else col.take(rows))
+            arrays = [
+                pa.array(cols[name], type=afield.type) if name in emitted else batch.column(name)
+                for name, afield in zip(out_names, arrow_schema)
+            ]
             yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     # the plan shows the function's name: name it after its steps

@@ -14,20 +14,26 @@ the connected-components rounds and the mention→root join; its candidate
 pairs are built map-side within each document. That is what makes the
 plan scale linearly with corpus size.
 
-With a ``StageCatalog`` the annotated/consensus/expanded/triples/nodes/edges
-stage tables are checkpointed with lineage manifests + counters, and a
-re-run reuses every stage whose recorded input snapshots are still current
-(the reference's per-stage CSV rewrite, done right). Each extraction stage
-is then one job with one crossing over the previous stage table.
+With a ``StageCatalog`` the step chain is checkpointed once, as the
+``documents`` stage: every zh document with every column the chain adds
+(the reference's one accreting document table, written once instead of as
+a CSV rewrite per stage). ``expanded`` is that stage filtered on a
+non-empty consensus; ``triples``/``nodes``/``edges`` (and ``re_replay``)
+are checkpointed over it. Each stage's manifest records its lineage and
+counters, and a re-run reuses every stage whose recorded input snapshots
+are still current.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from itertools import product
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.expansion import expand_step, expansion_stage
-from ..operators.fused import annotate_parse_stage, annotate_step, consensus_step
+from ..functions.parse import HAS_RELATION, NO_RELATION, STATUS_RETRY, STATUS_UNRECOGNIZED
+from ..operators.expansion import expand_step
+from ..operators.fused import annotate_step, consensus_step
 from ..operators.graph import build_edges, build_nodes
 from ..operators.linking import link_entities
 from ..operators.steps import run_steps
@@ -35,25 +41,34 @@ from ..operators.taxonomy import remap_step
 from ..sources.catalog import StageCatalog
 
 # unused here: perfbench/tracing.py patches these as attributes of this module
-from ..operators.fused import fused_consensus_stage  # noqa: F401
+from ..operators.expansion import expansion_stage  # noqa: F401
+from ..operators.fused import annotate_parse_stage, fused_consensus_stage  # noqa: F401
 from ..operators.taxonomy import build_taxonomy, remap_relations  # noqa: F401
 
+#: terminal detection statuses (``score_detect_with_attempts``) and
+#: expansion densities (``expansion_pairs``): the groups the counters count
+_STATUSES = (HAS_RELATION, NO_RELATION, STATUS_RETRY, STATUS_UNRECOGNIZED)
+_DENSITIES = ("low", "middle", "high")
 
-def expanded_frame(
+
+def document_frame(
     docs: DataFrame,
     ner_sources: tuple[str, ...] = ("ckip",),
     annotators: tuple[str, ...] = ("gemini", "gpt"),
     strict_verify_failure: bool = False,
 ) -> DataFrame:
-    """zh docs → fully expanded document frame (annotate → parse → taxonomy →
-    consensus → expansion → merge labels), uncheckpointed, in one Python
-    crossing per doc. ``ner_sources`` selects the expansion NER variants
-    (ckip / gemini / union golden column families — reference README.md
-    cols 20–31). ``annotators`` selects the detection models (k-annotator
-    consensus; must include gemini + gpt — the expansion step's
-    already-labeled anti-join reads their trad columns, reference
-    ``ckip_expansion.py:71-76``). ``strict_verify_failure`` switches
-    consensus to the test-corpus whole-doc-zeroing semantics."""
+    """zh docs → the wide per-document table, uncheckpointed: annotate →
+    parse → taxonomy → consensus → expansion → merge labels, in one Python
+    crossing per doc. Every zh doc stays; its expansion columns are null
+    when its consensus is empty.
+
+    ``ner_sources`` selects the expansion NER variants (ckip / gemini /
+    union golden column families — reference README.md cols 20–31).
+    ``annotators`` selects the detection models (k-annotator consensus;
+    must include gemini + gpt — the expansion step's already-labeled
+    anti-join reads their trad columns, reference ``ckip_expansion.py:71-76``).
+    ``strict_verify_failure`` switches consensus to the test-corpus
+    whole-doc-zeroing semantics."""
     if not {"gemini", "gpt"} <= set(annotators):
         raise ValueError("annotators must include 'gemini' and 'gpt'")
     zh = docs.filter(F.col("lang") == "zh").select("url", "text")
@@ -66,6 +81,54 @@ def expanded_frame(
             expand_step(tuple(ner_sources)),
         ],
     )
+
+
+def expanded_frame(
+    docs: DataFrame,
+    ner_sources: tuple[str, ...] = ("ckip",),
+    annotators: tuple[str, ...] = ("gemini", "gpt"),
+    strict_verify_failure: bool = False,
+) -> DataFrame:
+    """``document_frame`` through the reference's expansion gate
+    (``ckip_expansion.py:238-239``): the zh docs with a non-empty consensus.
+    Over the chain's ``mapInArrow`` the filter stays above the crossing."""
+    documents = document_frame(docs, ner_sources, annotators, strict_verify_failure)
+    return documents.filter(F.size("consensus_label") > 0)
+
+
+def document_counters() -> dict[str, Column]:
+    """The ``documents`` stage's counters, for ``StageCatalog.write_stage``
+    to observe on the stage write: detection (docs per annotator status
+    pair, re-instruction retries), taxonomy (distinct raw relation words),
+    consensus, and, over the docs with a consensus, expansion. A group count
+    is null when the group is empty, so the manifest leaves it out, as a
+    ``groupBy`` would."""
+    expanded = F.size("consensus_label") > 0
+
+    def group(cond: Column) -> Column:
+        return F.nullif(F.count_if(cond), F.lit(0))
+
+    def total(col: Column) -> Column:
+        return F.coalesce(F.sum(col), F.lit(0))
+
+    relations = F.array_distinct(F.concat("gemini_relations", "gpt_relations"))
+    counters = {"n_docs": F.count("*")}
+    for g, p in product(_STATUSES, repeat=2):
+        counters[f"gemini={g},gpt={p}"] = group(
+            (F.col("gemini_has_relation") == g) & (F.col("gpt_has_relation") == p)
+        )
+    for ann in ("gemini", "gpt"):
+        counters[f"{ann}_retried_docs"] = F.count_if(F.col(f"{ann}_attempts") > 1)
+        counters[f"{ann}_verify_errors"] = F.count_if(f"{ann}_verify_error")
+        counters[f"{ann}_parse_errors"] = F.count_if(f"{ann}_parse_error")
+    counters["n_distinct_relations"] = F.size(F.array_distinct(F.flatten(F.collect_set(relations))))
+    counters["n_consensus_triples"] = total(F.size("consensus_label"))
+    for d in _DENSITIES:
+        counters[f"density_{d}"] = group(expanded & (F.col("density") == d))
+    counters["n_expansion_triples"] = total(F.when(expanded, F.size("expansion_ternary")))
+    counters["expansion_failures"] = F.count_if(expanded & F.col("expansion_failed"))
+    counters["n_merged_triples"] = total(F.when(expanded, F.size("merge_label")))
+    return counters
 
 
 def triples_from_expanded(expanded: DataFrame) -> DataFrame:
@@ -105,119 +168,43 @@ def run_pipeline(
 ) -> dict:
     """Full run incl. linking + graph; returns stage DataFrames + metrics.
 
-    With ``catalog``: each stage, through ``triples``/``nodes``/``edges``, is
-    materialized once (plain parquet + manifest with lineage/counters); a
-    re-run with ``resume=True`` reads a completed stage instead of
-    recomputing it when every input snapshot its manifest records is still
-    that input's current one, so a recomputed stage forces new snapshots of
-    every stage downstream of it.
+    With ``catalog``: ``documents`` and then ``triples``/``nodes``/``edges``
+    are each materialized once (plain parquet + manifest with lineage and
+    counters); a re-run with ``resume=True`` reads a completed stage instead
+    of recomputing it when every input snapshot its manifest records is
+    still that input's current one, so a recomputed stage forces new
+    snapshots of every stage downstream of it. ``metrics`` holds the
+    counters of each stage this run wrote, observed on the write.
+    ``with_metrics`` has no effect (the counters cost no Spark job); it
+    stays accepted for callers that still pass it.
     ``with_replay`` adds entry point C (per-pair RE replay) as a further
     checkpointable stage over the expanded frame.
     """
     metrics: dict = {}
 
-    def checkpoint(name: str, df_fn, inputs: list[str], metric_fn=None) -> DataFrame:
+    def checkpoint(name: str, df_fn, inputs: list[str], counters=None) -> DataFrame:
         if catalog is None:
             return df_fn()
-        if resume and catalog.is_current(name, inputs):
-            return catalog.read_stage(spark, name)
-        df = df_fn()
-        if with_metrics and metric_fn:
-            # persist across metrics + write so the stage (incl. its scorer
-            # scan) computes ONCE, not once per action
-            df = df.persist()
-            try:
-                stage_metrics = metric_fn(df)
-                metrics[name] = stage_metrics
-                catalog.write_stage(df, name, inputs=inputs, metrics=stage_metrics)
-            finally:
-                df.unpersist()
-        else:
-            catalog.write_stage(df, name, inputs=inputs, metrics={})
+        if not (resume and catalog.is_current(name, inputs)):
+            catalog.write_stage(df_fn(), name, inputs=inputs, counters=counters)
+            if counters:
+                metrics[name] = catalog.manifest(name)["metrics"]
         return catalog.read_stage(spark, name)
 
-    zh = docs.filter(F.col("lang") == "zh").select("url", "text")
-
-    def detect_metrics(df: DataFrame) -> dict:
-        rows = (
-            df.groupBy("gemini_has_relation", "gpt_has_relation").count().collect()
-        )
-        out: dict = {"n_docs": 0}
-        for r in rows:
-            out["n_docs"] += r["count"]
-            out[f"gemini={r['gemini_has_relation']},gpt={r['gpt_has_relation']}"] = r["count"]
-        # M1 retry loop: docs whose answer needed re-instruction retries;
-        # the taxonomy's vocabulary (distinct raw relation words) rides along
-        relations = F.array_distinct(F.concat("gemini_relations", "gpt_relations"))
-        agg = df.agg(
-            *[
-                F.sum((F.col(f"{ann}_attempts") > 1).cast("int")).alias(ann)
-                for ann in ("gemini", "gpt")
-            ],
-            F.size(F.array_distinct(F.flatten(F.collect_set(relations)))).alias("n_rel"),
-        ).collect()[0]
-        for ann in ("gemini", "gpt"):
-            out[f"{ann}_retried_docs"] = int(agg[ann] or 0)
-        metrics["taxonomy"] = {"n_distinct_relations": int(agg["n_rel"])}
-        return out
-
-    parsed = checkpoint(
-        "annotated",
-        lambda: annotate_parse_stage(zh),
+    documents = checkpoint(
+        "documents",
+        lambda: document_frame(docs),
         ["web_pages"],
-        detect_metrics,
+        document_counters(),
     )
-
-    def consensus_metrics(df: DataFrame) -> dict:
-        row = df.agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.size("consensus_label")).alias("n_consensus_triples"),
-            F.sum(F.col("gemini_verify_error").cast("int")).alias("gemini_verify_errors"),
-            F.sum(F.col("gpt_verify_error").cast("int")).alias("gpt_verify_errors"),
-            F.sum(F.col("gemini_parse_error").cast("int")).alias("gemini_parse_errors"),
-            F.sum(F.col("gpt_parse_error").cast("int")).alias("gpt_parse_errors"),
-        ).collect()[0]
-        return {k: (int(v) if v is not None else 0) for k, v in row.asDict().items()}
-
-    cons = checkpoint(
-        "consensus",
-        lambda: run_steps(parsed, [remap_step(), consensus_step()]),
-        ["annotated"],
-        consensus_metrics,
-    )
-
-    def expansion_metrics(df: DataFrame) -> dict:
-        rows = df.groupBy("density").count().collect()
-        out = {f"density_{r['density']}": r["count"] for r in rows}
-        agg = df.agg(
-            F.sum(F.size("expansion_ternary")).alias("n_expansion_triples"),
-            F.sum(F.col("expansion_failed").cast("int")).alias("expansion_failures"),
-            F.sum(F.size("merge_label")).alias("n_merged_triples"),
-        ).collect()[0]
-        out.update({k: int(v or 0) for k, v in agg.asDict().items()})
-        return out
-
-    # without a catalog the stage frames above stay unexecuted views and
-    # the expanded frame is the fused chain: one crossing per doc
-    expanded = (
-        expanded_frame(docs)
-        if catalog is None
-        else checkpoint(
-            "expanded",
-            lambda: expansion_stage(cons),
-            ["consensus"],
-            expansion_metrics,
-        )
-    )
-
-    triples = checkpoint("triples", lambda: triples_from_expanded(expanded), ["expanded"])
+    expanded = documents.filter(F.size("consensus_label") > 0)
+    triples = checkpoint("triples", lambda: triples_from_expanded(expanded), ["documents"])
     linked = link_entities(expanded)
-    nodes = checkpoint("nodes", lambda: build_nodes(linked), ["expanded"])
-    edges = checkpoint("edges", lambda: build_edges(triples, linked, nodes), ["expanded"])
+    nodes = checkpoint("nodes", lambda: build_nodes(linked), ["documents"])
+    edges = checkpoint("edges", lambda: build_edges(triples, linked, nodes), ["documents"])
 
     result = {
-        "annotated": parsed,
-        "consensus": cons,
+        "documents": documents,
         "expanded": expanded,
         "triples": triples,
         "linked": linked,
@@ -229,20 +216,16 @@ def run_pipeline(
     if with_replay:
         from ..operators.re_replay import re_replay_stage, replay_triples
 
-        def replay_metrics(df: DataFrame) -> dict:
-            row = df.agg(
-                F.count("*").alias("n_docs"),
-                F.sum("mt5_pairs_scored").alias("n_pairs_scored"),
-                F.sum("mt5_pairs_skipped").alias("n_pairs_skipped"),
-                F.sum((F.col("mt5_has_relation") == "有").cast("int")).alias("n_positive_docs"),
-            ).collect()[0]
-            return {k: int(v or 0) for k, v in row.asDict().items()}
-
         replayed = checkpoint(
             "re_replay",
             lambda: re_replay_stage(expanded),
-            ["expanded"],
-            replay_metrics,
+            ["documents"],
+            {
+                "n_docs": F.count("*"),
+                "n_pairs_scored": F.coalesce(F.sum("mt5_pairs_scored"), F.lit(0)),
+                "n_pairs_skipped": F.coalesce(F.sum("mt5_pairs_skipped"), F.lit(0)),
+                "n_positive_docs": F.count_if(F.col("mt5_has_relation") == HAS_RELATION),
+            },
         )
         result["re_replay"] = replayed
         result["replay_triples"] = replay_triples(replayed, "mt5")

@@ -27,7 +27,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def _write_json(path: str, obj) -> None:
@@ -113,18 +113,28 @@ class StageCatalog:
         name: str,
         *,
         inputs: list[str] | None = None,
-        metrics: dict | None = None,
+        counters: dict[str, Column] | None = None,
     ) -> str:
         """Write a stage table as plain parquet in a new snapshot directory,
         one file per non-empty partition of ``df`` (an empty ``df`` still
-        leaves a schema-only file); returns the snapshot id."""
+        leaves a schema-only file); returns the snapshot id.
+
+        ``counters`` ({name: aggregate column}) are observed on the write
+        itself (``DataFrame.observe``), so they cost no Spark job; the
+        manifest's metrics hold each one whose value is not null."""
         snapshot_id = uuid.uuid4().hex[:16]
         # snapshots live in a SIBLING dir that is never itself a parquet read
         # root: nesting snap-<id> under the flat path (which append_partial/
         # finalize_stage use as a data_dir) would make a flat-snapshot read
         # recursively list newer snapshots' files
         data_dir = os.path.join(self._path(f"{name}__snaps"), f"snap-{snapshot_id}")
+        if counters:
+            observation = Observation()
+            df = df.observe(observation, *(c.alias(k) for k, c in counters.items()))
         df.write.mode("overwrite").parquet(data_dir)
+        metrics = {}
+        if counters:
+            metrics = {k: v for k, v in observation.get.items() if v is not None}
         return self._write_manifest(
             name,
             inputs=inputs,

@@ -45,10 +45,10 @@ def main() -> None:
     )
     ap.add_argument(
         "--annotate-chunks", type=int, default=0, metavar="K",
-        help="document-level incremental annotate: process the corpus in K "
+        help="document-level incremental extraction: process the corpus in K "
         "url-hash chunks, each flushed kill-safely (append job commit); a "
         "rerun anti-joins the committed chunks (resume_filter) and only "
-        "annotates what is missing",
+        "extracts what is missing",
     )
     args = ap.parse_args()
 
@@ -58,10 +58,8 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.fused import (
-        annotate_parse_stage,
-    )
     from research_on_document_level_person_relation_extraction_in_chinese_spark.plans.pipeline import (
+        document_frame,
         run_pipeline,
     )
     from research_on_document_level_person_relation_extraction_in_chinese_spark.sources.catalog import (
@@ -81,14 +79,14 @@ def main() -> None:
 
     # (chunking is only meaningful with resume: --no-resume recomputes the
     # stage wholesale inside run_pipeline)
-    if args.annotate_chunks > 0 and args.resume and not catalog.has_stage("annotated"):
+    if args.annotate_chunks > 0 and args.resume and not catalog.has_stage("documents"):
         # Kill-and-rerun story, end to end from the packaged artifact: the
-        # expensive annotate stage lands in K committed chunks; an
-        # interrupted run reruns with the SAME command and recomputes only
-        # the chunks that never committed.
-        zh = docs.filter(F.col("lang") == "zh").select("url", "text")
+        # extraction chain writes the documents stage in K committed chunks;
+        # an interrupted run reruns with the SAME command and recomputes
+        # only the chunks that never committed.
+        zh = docs.filter(F.col("lang") == "zh")
         n_total = zh.count()
-        remaining = resume_filter(zh, catalog, "annotated")
+        remaining = resume_filter(zh, catalog, "documents")
         n_remaining = remaining.count()
         print(
             json.dumps(
@@ -100,10 +98,10 @@ def main() -> None:
         k = args.annotate_chunks
         for i in range(k):
             chunk = remaining.where(F.pmod(F.hash("url"), F.lit(k)) == i)
-            catalog.append_partial(annotate_parse_stage(chunk), "annotated")
-            print(f"annotate chunk {i + 1}/{k} committed", flush=True)
+            catalog.append_partial(document_frame(chunk), "documents")
+            print(f"extraction chunk {i + 1}/{k} committed", flush=True)
         catalog.finalize_stage(
-            "annotated",
+            "documents",
             inputs=["web_pages"],
             metrics={"n_docs": n_total, "resumed_docs": n_total - n_remaining},
         )
@@ -114,7 +112,7 @@ def main() -> None:
         "n_nodes": result["nodes"].count(),
         "n_edges": result["edges"].count(),
         "metrics": result["metrics"],
-        "lineage": catalog.lineage("expanded"),
+        "lineage": catalog.lineage("triples"),
     }
     print(json.dumps(summary, ensure_ascii=False, indent=1))
 

@@ -7,6 +7,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from research_on_document_level_person_relation_extraction_in_chinese_spark.sources.catalog import (
     StageCatalog,
@@ -63,10 +64,11 @@ def test_resume_filter_uses_current_snapshot(spark, cat):
 def test_lineage_records_parent_snapshots(spark, cat):
     s1 = cat.write_stage(_rows(spark, range(3)), "raw")
     cat.write_stage(
-        _rows(spark, range(2)), "clean", inputs=["raw"], metrics={"n": 2}
+        _rows(spark, range(2)), "clean", inputs=["raw"], counters={"n": F.count("*")}
     )
     tree = cat.lineage("clean")
     assert tree["inputs"][0]["snapshot_id"] == s1
+    assert tree["metrics"] == {"n": 2}
 
 
 def test_flat_finalized_stage_isolated_from_new_snapshots(spark, cat):
@@ -83,11 +85,13 @@ def test_flat_finalized_stage_isolated_from_new_snapshots(spark, cat):
 
 
 def test_failed_commit_keeps_previous_snapshot(spark, cat):
-    """A commit that fails part-way (here: metrics that do not serialise)
-    leaves the snapshot log and the current manifest as they were."""
-    s1 = cat.write_stage(_rows(spark, range(2)), "s1", metrics={"n": 2})
+    """A commit that fails part-way (here: a counter whose value, a
+    decimal, does not serialise to JSON) leaves the snapshot log and the
+    current manifest as they were."""
+    s1 = cat.write_stage(_rows(spark, range(2)), "s1", counters={"n": F.count("*")})
+    unserialisable = F.sum(F.lit(1).cast("decimal(10,2)"))
     with pytest.raises(TypeError):
-        cat.write_stage(_rows(spark, range(5)), "s1", metrics={"n": object()})
+        cat.write_stage(_rows(spark, range(5)), "s1", counters={"n": unserialisable})
     assert [s["snapshot_id"] for s in cat.snapshots("s1")] == [s1]
     assert cat.manifest("s1")["snapshot_id"] == s1
     assert cat.read_stage(spark, "s1").count() == 2

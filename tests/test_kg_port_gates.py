@@ -43,7 +43,7 @@ def corpus(spark):
 
 @pytest.fixture(scope="module")
 def graph(spark, corpus):
-    res = run_pipeline(spark, corpus, catalog=None, with_metrics=False)
+    res = run_pipeline(spark, corpus, catalog=None)
     nodes, edges = res["nodes"].persist(), res["edges"].persist()
     yield nodes, edges
     nodes.unpersist()

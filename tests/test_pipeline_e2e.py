@@ -67,7 +67,7 @@ def test_parity_vs_reference_logic(spark, docs, triples):
 
 
 def test_linking_and_graph(spark, docs):
-    result = run_pipeline(spark, docs, catalog=None, with_metrics=False)
+    result = run_pipeline(spark, docs, catalog=None)
     nodes = result["nodes"].cache()
     edges = result["edges"].cache()
     stats = check_graph_consistency(nodes, edges)
@@ -94,31 +94,75 @@ def test_repeated_extract_no_persist_leak(spark):
     assert after == baseline, (baseline, after)
 
 
-def test_taxonomy_metric_counts_annotated_relations(spark, docs, tmp_path):
-    """``metrics["taxonomy"]["n_distinct_relations"]`` is the number of
-    distinct raw relation words in the annotated stage."""
-    cat = StageCatalog(str(tmp_path / "stages"))
-    res = run_pipeline(spark, docs, catalog=cat, with_metrics=True)
+def test_document_counters_cost_no_job(spark, docs, tmp_path):
+    """The ``documents`` stage's counters are observed on its write: a
+    catalog build with ``with_metrics=True`` runs exactly as many Spark jobs
+    as one with ``False``, and ``metrics["documents"]`` equals a
+    groupBy/agg recomputation over the read-back stage
+    (``n_distinct_relations``: the distinct raw relation words)."""
+    docs.count()  # the cached corpus is materialized before either build
+    sc = spark.sparkContext
+
+    def build(name, with_metrics):
+        cat = StageCatalog(str(tmp_path / name))
+        sc.setJobGroup(name, name)
+        try:
+            res = run_pipeline(spark, docs, catalog=cat, with_metrics=with_metrics)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return cat, res, len(sc.statusTracker().getJobIdsForGroup(name))
+
+    cat, res, jobs_with = build("with_metrics", True)
+    _, _, jobs_without = build("without_metrics", False)
+    assert jobs_with == jobs_without > 0
+
+    back = cat.read_stage(spark, "documents")
+    want = {"n_docs": back.count()}
+    for r in back.groupBy("gemini_has_relation", "gpt_has_relation").count().collect():
+        want[f"gemini={r['gemini_has_relation']},gpt={r['gpt_has_relation']}"] = r["count"]
     words = set()
-    for r in cat.read_stage(spark, "annotated").select("gemini_relations", "gpt_relations").collect():
+    for r in back.select("gemini_relations", "gpt_relations").collect():
         words.update(r["gemini_relations"] or [])
         words.update(r["gpt_relations"] or [])
-    assert res["metrics"]["taxonomy"]["n_distinct_relations"] == len(words) > 0
+    want["n_distinct_relations"] = len(words)
+    agg = back.agg(
+        *[F.sum((F.col(f"{a}_attempts") > 1).cast("int")).alias(f"{a}_retried_docs") for a in ("gemini", "gpt")],
+        F.sum(F.size("consensus_label")).alias("n_consensus_triples"),
+        *[F.sum(F.col(f"{a}_verify_error").cast("int")).alias(f"{a}_verify_errors") for a in ("gemini", "gpt")],
+        *[F.sum(F.col(f"{a}_parse_error").cast("int")).alias(f"{a}_parse_errors") for a in ("gemini", "gpt")],
+    ).collect()[0]
+    want.update({k: int(v or 0) for k, v in agg.asDict().items()})
+    expanded = back.filter(F.size("consensus_label") > 0)
+    for r in expanded.groupBy("density").count().collect():
+        want[f"density_{r['density']}"] = r["count"]
+    agg = expanded.agg(
+        F.sum(F.size("expansion_ternary")).alias("n_expansion_triples"),
+        F.sum(F.col("expansion_failed").cast("int")).alias("expansion_failures"),
+        F.sum(F.size("merge_label")).alias("n_merged_triples"),
+    ).collect()[0]
+    want.update({k: int(v or 0) for k, v in agg.asDict().items()})
+
+    assert res["metrics"]["documents"] == want
+    assert cat.manifest("documents")["metrics"] == want
+    assert want["n_docs"] == docs.where(F.col("lang") == "zh").count()
+    assert want["n_distinct_relations"] > 0 and want["n_merged_triples"] > 0
 
 
 def test_checkpoint_resume(spark, docs, tmp_path):
     cat = StageCatalog(str(tmp_path / "stages"))
-    r1 = run_pipeline(spark, docs, catalog=cat, with_metrics=True)
+    r1 = run_pipeline(spark, docs, catalog=cat)
     n1 = r1["triples"].count()
-    assert cat.has_stage("annotated") and cat.has_stage("expanded")
-    assert cat.manifest("consensus")["inputs"]["annotated"]
-    lin = cat.lineage("expanded")
-    assert lin["inputs"][0]["stage"] == "consensus"
-    assert r1["metrics"]["consensus"]["n_consensus_triples"] > 0
+    assert cat.has_stage("documents") and cat.has_stage("triples")
+    assert cat.manifest("triples")["inputs"]["documents"] == cat.manifest("documents")["snapshot_id"]
+    lin = cat.lineage("triples")
+    assert lin["inputs"][0]["stage"] == "documents"
+    assert lin["inputs"][0]["inputs"][0] == {"stage": "web_pages", "external": True, "inputs": []}
+    assert r1["metrics"]["documents"]["n_consensus_triples"] > 0
 
     # resume run must reuse stage tables and produce identical output
-    r2 = run_pipeline(spark, docs, catalog=cat, resume=True, with_metrics=False)
+    r2 = run_pipeline(spark, docs, catalog=cat, resume=True)
     assert r2["triples"].count() == n1
-    # document-level resume: everything already processed → empty remainder
-    remaining = resume_filter(docs.select("url"), cat, "annotated")
+    # document-level resume: every zh doc, with or without a consensus, is
+    # in the documents stage → the remainder is exactly the non-zh docs
+    remaining = resume_filter(docs.select("url"), cat, "documents")
     assert remaining.count() == docs.where(F.col("lang") != "zh").count()

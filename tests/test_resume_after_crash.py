@@ -1,6 +1,6 @@
 """Kill-and-rerun resumability (BASELINE target): a run interrupted after the
-consensus stage must resume from the surviving stage tables, recompute only
-downstream stages, and emit identical triples."""
+documents stage must resume from the surviving stage table, recompute only
+downstream stages, and emit identical outputs."""
 
 import shutil
 
@@ -21,32 +21,34 @@ from research_on_document_level_person_relation_extraction_in_chinese_spark.sour
 N = 200
 
 
+def _outputs(res):
+    return {k: sorted(map(tuple, res[k].collect())) for k in ("triples", "nodes", "edges")}
+
+
 def test_resume_recomputes_only_missing_stage(spark, tmp_path):
     docs = generate_corpus(spark, N, seed=42).cache()
     root = str(tmp_path / "stages")
     cat = StageCatalog(root)
-    full = run_pipeline(spark, docs, catalog=cat, with_metrics=False)
-    expected = sorted(map(tuple, full["triples"].collect()))
-    annotated_snapshot = cat.manifest("annotated")["snapshot_id"]
+    expected = _outputs(run_pipeline(spark, docs, catalog=cat))
+    documents_snapshot = cat.manifest("documents")["snapshot_id"]
+    lost = {name: cat.manifest(name)["snapshot_id"] for name in ("triples", "nodes", "edges")}
 
-    # simulate a crash that lost the expansion stage (and everything after);
-    # the data dir comes from the manifest (r6: snapshots live under
-    # <name>__snaps/snap-<id>, a sibling of the flat legacy path)
-    shutil.rmtree(cat.manifest("expanded")["data_dir"])
-    (tmp_path / "stages" / "expanded.manifest.json").unlink()
+    # simulate a crash that lost every stage after documents; the data dir
+    # comes from the manifest (snapshots live under <name>__snaps/snap-<id>,
+    # a sibling of the flat path)
+    for name in lost:
+        shutil.rmtree(cat.manifest(name)["data_dir"])
+        (tmp_path / "stages" / f"{name}.manifest.json").unlink()
 
-    resumed = run_pipeline(spark, docs, catalog=cat, resume=True, with_metrics=False)
-    assert sorted(map(tuple, resumed["triples"].collect())) == expected
-    # upstream stages were reused, not recomputed (snapshot ids unchanged)
-    assert cat.manifest("annotated")["snapshot_id"] == annotated_snapshot
-    # the recomputed stage re-links its lineage to the surviving consensus
-    assert cat.lineage("expanded")["inputs"][0]["snapshot_id"] == cat.manifest(
-        "consensus"
-    )["snapshot_id"]
-    # a new expanded snapshot forces new triples over it
-    assert cat.lineage("triples")["inputs"][0]["snapshot_id"] == cat.manifest(
-        "expanded"
-    )["snapshot_id"]
+    resumed = run_pipeline(spark, docs, catalog=cat, resume=True)
+    assert _outputs(resumed) == expected
+    # the documents stage was reused, not recomputed (snapshot id unchanged)
+    assert cat.manifest("documents")["snapshot_id"] == documents_snapshot
+    # the recomputed stages are new snapshots whose lineage re-links to the
+    # surviving documents snapshot
+    for name, old in lost.items():
+        assert cat.manifest(name)["snapshot_id"] != old
+        assert cat.lineage(name)["inputs"][0]["snapshot_id"] == documents_snapshot
 
 
 def test_resume_over_complete_catalog_commits_nothing(spark, tmp_path):
@@ -54,17 +56,13 @@ def test_resume_over_complete_catalog_commits_nothing(spark, tmp_path):
     triples, nodes and edges: each stage keeps one snapshot, and the
     resumed outputs equal the catalog-free run."""
     docs = generate_corpus(spark, 60, seed=42).cache()
-
-    def outputs(res):
-        return {k: sorted(map(tuple, res[k].collect())) for k in ("triples", "nodes", "edges")}
-
-    expected = outputs(run_pipeline(spark, docs, catalog=None, with_metrics=False))
+    expected = _outputs(run_pipeline(spark, docs, catalog=None))
     assert expected["triples"] and expected["nodes"] and expected["edges"]
     cat = StageCatalog(str(tmp_path / "stages"))
-    run_pipeline(spark, docs, catalog=cat, with_metrics=False)
-    resumed = run_pipeline(spark, docs, catalog=cat, resume=True, with_metrics=False)
-    assert outputs(resumed) == expected
-    stages = ("annotated", "consensus", "expanded", "triples", "nodes", "edges")
+    run_pipeline(spark, docs, catalog=cat)
+    resumed = run_pipeline(spark, docs, catalog=cat, resume=True)
+    assert _outputs(resumed) == expected
+    stages = ("documents", "triples", "nodes", "edges")
     assert {name: len(cat.snapshots(name)) for name in stages} == dict.fromkeys(stages, 1)
 
 
@@ -116,13 +114,10 @@ def test_corpus_without_zh_docs_through_catalog(spark, tmp_path):
     catalog-free run (empty triples, nodes and edges)."""
     docs = generate_corpus(spark, 40, seed=42).filter(F.col("lang") != "zh").cache()
     assert docs.count() > 0
-
-    def outputs(res):
-        return {k: sorted(map(tuple, res[k].collect())) for k in ("triples", "nodes", "edges")}
-
-    expected = outputs(run_pipeline(spark, docs, catalog=None, with_metrics=False))
+    expected = _outputs(run_pipeline(spark, docs, catalog=None))
     assert expected == {"triples": [], "nodes": [], "edges": []}
     cat = StageCatalog(str(tmp_path / "stages"))
-    assert outputs(run_pipeline(spark, docs, catalog=cat)) == expected
-    assert cat.has_stage("expanded")
-    assert outputs(run_pipeline(spark, docs, catalog=cat, resume=True)) == expected
+    assert _outputs(run_pipeline(spark, docs, catalog=cat)) == expected
+    assert cat.has_stage("documents")
+    assert cat.manifest("documents")["metrics"]["n_docs"] == 0
+    assert _outputs(run_pipeline(spark, docs, catalog=cat, resume=True)) == expected

@@ -88,16 +88,17 @@ def test_spark_submit_py_files(tmp_path):
     assert summary["n_triples"] > 0
     assert summary["n_nodes"] > 0
     assert summary["lineage"].get("snapshot_id"), "lineage manifest chain missing"
+    assert summary["lineage"]["inputs"][0]["stage"] == "documents"
     # checkpointed stages landed under --out
-    assert (out_dir / "expanded.manifest.json").exists()
+    assert (out_dir / "documents.manifest.json").exists()
 
 
 def test_spark_submit_kill_and_resume(tmp_path):
     """Round-3 verdict item 8: the kill-and-rerun story end to end from the
     packaged artifact. Run 1 (--annotate-chunks 3) is SIGKILLed after the
-    first chunk commits; run 2 with the SAME command resumes — the resume
-    line reports >0 already-annotated docs — and its final triple set equals
-    a clean (never-killed) run's."""
+    first chunk of the documents stage commits; run 2 with the SAME command
+    resumes — the resume line reports >0 already-processed docs — and its
+    final triple, node and edge counts equal a clean (never-killed) run's."""
     zip_path, script, env = _package(tmp_path)
     out_dir = tmp_path / "kg_resume"
     cmd = _submit_cmd(zip_path, script, out_dir, "--annotate-chunks", "3")
@@ -115,7 +116,7 @@ def test_spark_submit_kill_and_resume(tmp_path):
     deadline = time.time() + 300
     try:
         for line in proc.stdout:
-            if "annotate chunk 1/3 committed" in line:
+            if "extraction chunk 1/3 committed" in line:
                 break
             assert time.time() < deadline, "chunk 1 never committed"
         else:
@@ -127,9 +128,9 @@ def test_spark_submit_kill_and_resume(tmp_path):
             pass
         proc.wait(timeout=60)
     # committed chunk parquet is visible, but the stage is NOT finalized
-    assert not (out_dir / "annotated.manifest.json").exists()
+    assert not (out_dir / "documents.manifest.json").exists()
     committed = [
-        f for f in os.listdir(out_dir / "annotated") if f.endswith(".parquet")
+        f for f in os.listdir(out_dir / "documents") if f.endswith(".parquet")
     ]
     assert committed, "no committed chunk files survived the kill"
 
@@ -145,7 +146,7 @@ def test_spark_submit_kill_and_resume(tmp_path):
     assert resumed["docs_already_annotated"] > 0, resumed
     assert resumed["docs_already_annotated"] < resumed["resume_docs_total"]
     summary = _summary(proc2.stdout)
-    assert (out_dir / "annotated.manifest.json").exists()
+    assert (out_dir / "documents.manifest.json").exists()
 
     # clean reference run: same corpus, never killed → identical results
     out_clean = tmp_path / "kg_clean"
